@@ -54,6 +54,7 @@ from bayeslite_spark.backends.base import Backend, category_counts, model_seed, 
 from bayeslite_spark.catalog import submit_fit
 from bayeslite_spark.catalog import Generator, Population
 from bayeslite_spark.functions.mathutil import logmeanexp
+from bayeslite_spark.session import local_frame
 
 N_CLUSTER_RANGE = (2, 6)
 HALF_LOG2PI = 0.5 * math.log(2 * math.pi)
@@ -2432,9 +2433,9 @@ class CrossCatLiteBackend(Backend):
                                             else cdf(hi) - cdf(lo))))
                         rows.append((modelno, int(m["views"][column]), int(cid),
                                      cat, float(mass)))
-            params = spark.createDataFrame(
-                rows, "modelno int, view int, cluster int, "
-                      "predicted string, mass double")
+            params = local_frame(
+                spark, rows, "modelno int, view int, cluster int, "
+                             "predicted string, mass double")
             joined = rt["assign"].join(
                 F.broadcast(params), ["modelno", "view", "cluster"])
             masses = joined.groupBy("rowkey", "predicted").agg(
@@ -2459,8 +2460,8 @@ class CrossCatLiteBackend(Backend):
                 if mu is None:
                     continue
                 rows.append((modelno, int(m["views"][column]), int(cid), float(mu)))
-        params = spark.createDataFrame(
-            rows, "modelno int, view int, cluster int, predicted double")
+        params = local_frame(
+            spark, rows, "modelno int, view int, cluster int, predicted double")
         joined = rt["assign"].join(F.broadcast(params), ["modelno", "view", "cluster"])
         return joined.groupBy("rowkey").agg(
             F.avg("predicted").alias("predicted"),
@@ -2480,25 +2481,20 @@ class CrossCatLiteBackend(Backend):
         if not rt or "assign" not in rt:
             raise BQLError("ANALYZE the generator before similarity queries")
         n_models = len(gen.models)
-        frames = []
-        for modelno, m in gen.models.items():
-            vid = int(m["views"][context])
-            a = rt["assign"].filter(
-                (F.col("modelno") == modelno) & (F.col("view") == vid)
-            ).select("rowkey", "cluster")
-            l = a.alias("l")
-            r = a.alias("r")
-            frames.append(
-                l.join(r, (F.col("l.cluster") == F.col("r.cluster"))
-                       & (F.col("l.rowkey") < F.col("r.rowkey")))
-                .select(F.col("l.rowkey").alias("rowkey0"),
-                        F.col("r.rowkey").alias("rowkey1"))
-            )
-        allf = frames[0]
-        for f in frames[1:]:
-            allf = allf.unionAll(f)
+        # every model's context view in one predicate, then ONE self-join
+        # on (modelno, cluster)
+        ctx = " OR ".join(
+            f"(modelno = {int(mn)} AND view = {int(m['views'][context])})"
+            for mn, m in gen.models.items())
+        a = rt["assign"].filter(F.expr(ctx)).select("modelno", "rowkey", "cluster")
+        l = a.alias("l")
+        r = a.alias("r")
         return (
-            allf.groupBy("rowkey0", "rowkey1")
+            l.join(r, (F.col("l.modelno") == F.col("r.modelno"))
+                   & (F.col("l.cluster") == F.col("r.cluster"))
+                   & (F.col("l.rowkey") < F.col("r.rowkey")))
+            .groupBy(F.col("l.rowkey").alias("rowkey0"),
+                     F.col("r.rowkey").alias("rowkey1"))
             .agg((F.count(F.lit(1)) / float(n_models)).alias("similarity"))
         )
 
@@ -2611,8 +2607,8 @@ class CrossCatLiteBackend(Backend):
         if not used:
             # reference error at the same point (src/bqlfn.py:447-449)
             raise BQLError("No matching rows for PREDICTIVE RELEVANCE.")
-        wdf = spark.createDataFrame(wrows, "modelno int, view int, cluster int, w double")
-        seldf = spark.createDataFrame(sel, "modelno int, view int")
+        wdf = local_frame(spark, wrows, "modelno int, view int, cluster int, w double")
+        seldf = local_frame(spark, sel, "modelno int, view int")
         base = assign.join(F.broadcast(seldf), ["modelno", "view"])
         j = base.join(F.broadcast(wdf), ["modelno", "view", "cluster"], "left")
         return j.groupBy("rowkey").agg(

@@ -17,6 +17,7 @@ log-domain logmeanexp for densities (src/bqlfn.py:351-408).
 from __future__ import annotations
 
 import math
+import re
 from functools import reduce
 
 import numpy as np
@@ -33,8 +34,43 @@ from bayeslite_spark.parser import ast_nodes as A
 from bayeslite_spark.parser.dialect import rewrite_sqlite
 from bayeslite_spark.errors import BQLError
 from bayeslite_spark.parser import parse_phrase
+from bayeslite_spark.session import local_frame
 
 _EMPTY = object()
+
+
+_INT_LIT_RE = re.compile(r"[+-]?[0-9]+")
+# '' is the only escape folded; a backslash goes to Spark's unescaping
+_STR_LIT_RE = re.compile(r"'((?:[^'\\]|'')*)'")
+_KEYWORD_LITS = {"null": None, "true": True, "false": False}
+
+
+def _fold_literal(sql: str):
+    """The value Spark's ``SELECT <sql>`` would collect, for a plain
+    literal — an int64 integer, a single-quoted string, NULL, TRUE or
+    FALSE — with the same Python type; ``_EMPTY`` for anything else."""
+    t = sql.strip()
+    if _INT_LIT_RE.fullmatch(t):
+        v = int(t)
+        return v if -2 ** 63 <= v < 2 ** 63 else _EMPTY
+    m = _STR_LIT_RE.fullmatch(t)
+    if m:
+        return m.group(1).replace("''", "'")
+    return _KEYWORD_LITS.get(t.lower(), _EMPTY)
+
+
+def _dlit(v: float) -> str:
+    """A Spark SQL DOUBLE literal that parses back to exactly ``v``."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"({v!r}D)"
+    return SparkBQL._lit_sql(v)
+
+
+def _slit(v: str) -> str:
+    """A Spark SQL string literal that parses back to exactly ``v``
+    (Spark unescapes backslashes inside literals)."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _logsumexp_rows(mat):
@@ -273,13 +309,14 @@ class SparkBQL:
     def _ok(self, msg: str) -> DataFrame:
         # every DDL path returns through here -> metadata views stay fresh
         self.refresh_metadata_views()
-        return self.spark.createDataFrame([(msg,)], "status string")
+        return local_frame(self.spark, [(msg,)], "status string")
 
     def refresh_metadata_views(self) -> None:
         """Expose the catalog as queryable temp views, mirroring the
         reference's bayesdb_* SQLite tables (src/schema.py:26-104) so plain
         SELECTs can introspect populations/variables/generators/models."""
-        self.spark.createDataFrame(
+        local_frame(
+            self.spark,
             [(p.id, p.name, p.table) for p in self.catalog.populations.values()],
             "id int, name string, tabname string",
         ).createOrReplaceTempView("bayesdb_population")
@@ -299,23 +336,23 @@ class SparkBQL:
             for g in self.catalog.generators.values()
             for name, lv in (g.peek_state("latents") or {}).items()
         ]
-        self.spark.createDataFrame(
-            vrows or [],
+        local_frame(
+            self.spark, vrows,
             "population_id int, generator_id int, colno int, name string, stattype string",
         ).createOrReplaceTempView("bayesdb_variable")
         grows = [
             (g.id, g.name, g.population, g.backend, len(g.models))
             for g in self.catalog.generators.values()
         ]
-        self.spark.createDataFrame(
-            grows or [],
+        local_frame(
+            self.spark, grows,
             "id int, name string, population string, backend string, n_models int",
         ).createOrReplaceTempView("bayesdb_generator")
         mrows = [
             (g.id, mn) for g in self.catalog.generators.values() for mn in sorted(g.models)
         ]
-        self.spark.createDataFrame(
-            mrows or [], "generator_id int, modelno int"
+        local_frame(
+            self.spark, mrows, "generator_id int, modelno int"
         ).createOrReplaceTempView("bayesdb_generator_model")
 
     # -- DDL ----------------------------------------------------------------
@@ -948,7 +985,11 @@ class SparkBQL:
 
     def _eval_scalar(self, sql: str):
         """Driver-side evaluation of a literal/scalar SQL expression (the
-        reference evaluates these at compile time too, src/compiler.py:679)."""
+        reference evaluates these at compile time too, src/compiler.py:679).
+        Plain literals fold here; only expressions cost a Spark job."""
+        v = _fold_literal(sql)
+        if v is not _EMPTY:
+            return v
         sql = self._materialize_bql_subqueries(sql)
         return self.spark.sql(f"SELECT {sql} AS v").collect()[0]["v"]
 
@@ -1357,10 +1398,10 @@ class SparkBQL:
                 vals.append(self._eval_scalar(filled))
             else:
                 vals.append(self._eval_scalar(item.expr.sql))
-        sel = ", ".join(
-            f"{self._lit_sql(v)} AS `{n}`" for n, v in zip(names, vals)
-        )
-        return self.spark.sql(f"SELECT {sel}")
+        # an inline VALUES table is a local relation: no job to collect
+        row = ", ".join(self._lit_sql(v) for v in vals)
+        cols = ", ".join(f"`{n}`" for n in names)
+        return self.spark.sql(f"SELECT * FROM VALUES ({row}) AS t({cols})")
 
     @staticmethod
     def _lit_sql(v) -> str:
@@ -1642,9 +1683,10 @@ class SparkBQL:
                                     gens: list[Generator], est: A.EstimatorCall) -> Column:
         """PREDICTIVE PROBABILITY OF col: per-row log density of the row's
         own value, model-averaged; NULL value -> NULL (reference
-        src/bqlfn.py:459-486). Vectorized pandas UDF with broadcast model
-        parameters — the Spark replacement for the reference's per-row
-        SQLite callback."""
+        src/bqlfn.py:459-486). The Spark replacement for the reference's
+        per-row SQLite callback: a Catalyst expression over driver-folded
+        model constants for nig_normal's single column, vectorized pandas
+        UDFs with broadcast model state for CrossCat and joint targets."""
         columns = [c.lower() for c in
                    (est.targets.get("columns") or [est.targets["column"]])]
         givens = est.targets.get("givens") or []
@@ -1676,51 +1718,42 @@ class SparkBQL:
         # values, src/bqlfn.py:459-486).
         colname = columns[0]
         var = pop.variables[colname]
-        kind = "nominal" if var.stattype == "nominal" else "numerical"
-        params = []  # flat [(mu, sigma)] or [({cat: logp})] across gens x models
-        for g in gens:
-            for mn in sorted(g.models):
-                m = g.models[mn]
-                if kind == "numerical":
-                    p = m["numerical"][colname]
-                    params.append((p["mu"], p["sigma"]))
-                else:
-                    p = m["nominal"][colname]
-                    params.append({c: math.log(pr) if pr > 0 else -math.inf
-                                   for c, pr in zip(p["categories"], p["probs"])})
-
-        if kind == "numerical":
-            mus = np.array([p[0] for p in params])
-            sigmas = np.array([p[1] for p in params])
-
-            @F.pandas_udf("double")
-            def logpdf_udf(vals: pd.Series) -> pd.Series:
-                x = vals.astype(float).to_numpy()[:, None]
-                lps = (
-                    -np.log(sigmas)[None, :]
-                    - 0.5 * math.log(2 * math.pi)
-                    - 0.5 * ((x - mus[None, :]) / sigmas[None, :]) ** 2
-                )
-                m = lps.max(axis=1, keepdims=True)
-                out = (m[:, 0] + np.log(np.exp(lps - m).mean(axis=1)))
-                return pd.Series(np.where(vals.isna().to_numpy(), np.nan, out))
-
-            return logpdf_udf(F.col(var.name).cast("double"))
-
-        tables = params
-
-        @F.pandas_udf("double")
-        def logpmf_udf(vals: pd.Series) -> pd.Series:
-            out = []
-            for v in vals:
-                if v is None or (isinstance(v, float) and math.isnan(v)):
-                    out.append(np.nan)
-                    continue
-                lps = [t.get(str(v), -math.inf) for t in tables]
-                out.append(logmeanexp(lps))
-            return pd.Series(out, dtype="float64")
-
-        return logpmf_udf(F.col(var.name).cast("string"))
+        models = [g.models[mn] for g in gens for mn in sorted(g.models)]
+        x = "`" + var.name.replace("`", "``") + "`"
+        if var.stattype == "nominal":
+            # per-category logmeanexp over the models, folded on the
+            # driver into a map literal; an unseen category scores -inf
+            tables = []
+            for m in models:
+                p = m["nominal"][colname]
+                tables.append({c: math.log(pr) if pr > 0 else -math.inf
+                               for c, pr in zip(p["categories"], p["probs"])})
+            cats = sorted({c for t in tables for c in t})
+            entries = ", ".join(
+                f"{_slit(str(c))}, "
+                f"{_dlit(logmeanexp([t.get(c, -math.inf) for t in tables]))}"
+                for c in cats)
+            lookup = f"map({entries})[CAST({x} AS STRING)]" if cats else "NULL"
+            return F.expr(
+                f"CASE WHEN {x} IS NULL THEN NULL "
+                f"ELSE coalesce({lookup}, {_dlit(-math.inf)}) END")
+        # Gaussian log density per model, lp = k - z*z/2 with
+        # k = -log(sigma) - log(2 pi)/2 folded on the driver, then the
+        # logmeanexp over models (the lambdas bind the lp array and its max
+        # once, so the expression grows linearly in the model count): a
+        # Catalyst expression, no Python worker
+        mus = np.array([m["numerical"][colname]["mu"] for m in models], dtype=float)
+        sigmas = np.array([m["numerical"][colname]["sigma"] for m in models],
+                          dtype=float)
+        ks = -np.log(sigmas) - 0.5 * math.log(2 * math.pi)
+        lps = []
+        for k, mu, sd in zip(ks, mus, sigmas):
+            z = f"((CAST({x} AS DOUBLE) - {_dlit(mu)}) / {_dlit(sd)})"
+            lps.append(f"({_dlit(k)} - 0.5D * ({z} * {z}))")
+        mean = f"aggregate(a, 0D, (s, lp) -> s + exp(lp - m)) / {_dlit(len(models))}"
+        return F.expr(
+            f"transform(array(array({', '.join(lps)})), a -> "
+            f"transform(array(array_max(a)), m -> m + ln({mean}))[0])[0]")
 
     def _crosscat_pp_col(self, pop: Population, gens: list[Generator],
                          columns: list[str], givens: list[str]) -> Column:
@@ -1954,7 +1987,7 @@ class SparkBQL:
             for v in pop.variables.values()
             if v.stattype not in ("ignore", "key")
         ]
-        return self.spark.createDataFrame(rows, "name string, stattype string, colno int")
+        return local_frame(self.spark, rows, "name string, stattype string, colno int")
 
     @staticmethod
     def _colwise_map(vals: dict[str, float | None]) -> Column:
@@ -2081,8 +2114,9 @@ class SparkBQL:
                 f"SELECT name0, name1 FROM pair_universe WHERE {where}"
             ).fetchall()
         except Exception:  # noqa: BLE001 — dialect edge: Spark fallback
-            sdf = self.spark.createDataFrame(
-                [(p[0], p[2]) for p in pairs], "name0 string, name1 string"
+            sdf = local_frame(
+                self.spark, [(p[0], p[2]) for p in pairs],
+                "name0 string, name1 string",
             ).filter(self._expr(where))
             kept = [(r["name0"], r["name1"]) for r in sdf.collect()]
         finally:
@@ -2146,9 +2180,8 @@ class SparkBQL:
         if ast.order_by:
             ast.order_by = self._strip_v_alias(ast.order_by)
         universe = self._column_universe(ast, pop)
-        base = self.spark.createDataFrame(
-            universe, "name string, stattype string, colno int"
-        )
+        base = local_frame(
+            self.spark, universe, "name string, stattype string, colno int")
         # estimators nest in WHERE here just as in row context (the
         # reference compiles them as ordinary scalar functions in any
         # expression position): split the clause into a SQL template +
@@ -2629,7 +2662,7 @@ class SparkBQL:
 
             frames.append(self.spark.range(int(k)).mapInPandas(make(), schema))
         if not frames:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = frames[0]
         for f in frames[1:]:
             df = df.unionAll(f)
@@ -2981,8 +3014,8 @@ class SparkBQL:
                 cols.append(pdf[g].astype(float).to_numpy())
         X = np.column_stack(cols)
         beta, *_ = np.linalg.lstsq(X, y, rcond=None)
-        return self.spark.createDataFrame(
-            [(n, float(b)) for n, b in zip(names, beta)],
+        return local_frame(
+            self.spark, [(n, float(b)) for n, b in zip(names, beta)],
             "variable string, coefficient double",
         )
 

@@ -290,9 +290,10 @@ def q54_bql_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("x55_bql_predictive_prob", None, tags=("bql-engine", "rows-only"))
 def q55_bql_predictive_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ESTIMATE PREDICTIVE PROBABILITY OF col FROM pop — per-row vectorized
-    pandas UDF with broadcast model state (reference evaluates this
-    row-at-a-time in SQLite, src/bqlfn.py:459-486)."""
+    """ESTIMATE PREDICTIVE PROBABILITY OF col FROM pop — per-row Catalyst
+    expression over driver-folded model constants, no Python worker
+    (reference evaluates this row-at-a-time in SQLite,
+    src/bqlfn.py:459-486)."""
     eng = engine_for(spark, sf_dir)
     return round_floats(eng.execute(
         "ESTIMATE l_orderkey, l_linenumber, "

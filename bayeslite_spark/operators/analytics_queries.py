@@ -1887,7 +1887,8 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
 
     ``specs``: ``{rank_name: [Column, ...]}`` — each list expresses one
     total order as LONG-valued ASCENDING sort keys (negate for
-    descending; exact for int64).  ``key_col`` (a unique long key) is
+    descending; exact for int64; a non-integral key raises
+    ``TypeError``).  ``key_col`` (a unique long key) is
     appended to every spec as the final tie-break, so specs only list
     the value keys.  All spec lists must share the same arity.
 
@@ -1905,11 +1906,20 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
     """
     import pandas as real_pd
 
+    from pyspark.sql.types import IntegralType
+
     carry = list(carry or ())
     names = list(specs)
     arity = len(next(iter(specs.values())))
     carry_types = {f.name: f.dataType for f in df.schema.fields
                    if f.name in carry}
+    # keys are cast to long below: a fractional key would rank wrong
+    keys = df.select(*[c for cols in specs.values() for c in cols]).schema
+    bad = [f"{f.name}: {f.dataType.simpleString()}" for f in keys.fields
+           if not isinstance(f.dataType, IntegralType)]
+    if bad:
+        raise TypeError("distributed_multi_rank: sort keys must be integral, "
+                        f"got {', '.join(bad)}")
 
     stacked = None
     for i, name in enumerate(names):

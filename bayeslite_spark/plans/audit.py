@@ -276,7 +276,7 @@ def unbounded_broadcast_subtrees(df: DataFrame) -> list[str]:
     data scale (the q34 corpus-side-hint bug, machine-checkable)."""
     bad = []
     for sub in broadcast_hint_subtrees(df):
-        if not re.search(r"Relation ?\[", sub):
+        if not re.search(r"(?<!Local)Relation ?\[", sub):
             continue  # no base scan under the hint (derived/local data)
         if re.search(r"\b(Filter|Aggregate|GlobalLimit|LocalLimit|Join|"
                      r"Deduplicate|Sample)\b", sub):

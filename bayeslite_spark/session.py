@@ -60,6 +60,25 @@ def get_spark(app_name: str = "bayeslite_spark", shuffle_partitions: int | None 
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in ``schema`` order;
+    ``schema`` a DDL string or StructType), built through Arrow as a local
+    relation: collecting it runs no Spark job. ``createDataFrame(list)``
+    instead parallelizes the list into an RDD, so every collect of it is a
+    job with a Python-worker re-serialization pass."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def normalize_events(df: DataFrame) -> DataFrame:
     """Convert the nanosecond int64 ``ts`` (see nanosAsLong config) to a
     proper timestamp, truncating ns -> us exactly like DuckDB's

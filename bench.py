@@ -125,6 +125,13 @@ def main() -> None:
         "contended": contended,
         "n_retried": len(retried),
     }
+    finish(summary, timings, os.path.dirname(os.path.abspath(__file__)))
+
+
+def finish(summary: dict, timings: dict, here: str) -> None:
+    """Print the full result line, write the per-query sidecars into
+    ``here``, and print the summary again as the LAST stdout line — on
+    every path: a sidecar failure only warns."""
     print(json.dumps({**summary, "queries": timings}))
     # The per-query map pushes the full line past the driver's tail-capture
     # window (BENCH_r06 recorded "parsed": null; the window is 2000 chars, a
@@ -136,7 +143,6 @@ def main() -> None:
     # count so the main and low-core runs don't clobber each other.
     try:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-        here = os.path.dirname(os.path.abspath(__file__))
         record = {**summary, "cpus": int(cpus) if cpus else None,
                   "queries": timings}
         names = ["BENCH_QUERIES.json"]          # latest run, fixed name
@@ -149,7 +155,9 @@ def main() -> None:
                 json.dump(record, f, indent=1, sort_keys=True)
                 f.write("\n")
             os.replace(tmp, sidecar)
-    except OSError as e:
+    except (OSError, ValueError, TypeError) as e:
+        # a malformed SPARK_GRAFT_CPUS (int() raises) must not cost the
+        # summary line below
         print(f"bench warning: sidecar write failed: {e}", file=sys.stderr)
     print(json.dumps(summary))
 

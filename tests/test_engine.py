@@ -1250,3 +1250,163 @@ def test_fixture_fingerprint_covers_fixture_definition(monkeypatch):
         mq, "_FIXTURE_CHAINS", mq._FIXTURE_CHAINS[:-1]
         + (("INITIALIZE 9 MODELS FOR gen_sim",),))
     assert mq._fixture_fingerprint("/tmp/sfX") != base
+
+
+_FOLDED = ["25", "-7", "+3", "9223372036854775807", "'it''s'", "NULL", "TRUE"]
+_NOT_FOLDED = ["2.5", "1e3", "1+2", "9223372036854775808"]
+
+
+@pytest.mark.parametrize("lit", _FOLDED)
+def test_literal_fold_matches_spark(spark, lit):
+    """Plain literals fold on the driver to exactly the value AND Python
+    type that Spark's ``SELECT <lit>`` collects."""
+    from bayeslite_spark.engine import _EMPTY, _fold_literal
+
+    want = spark.sql(f"SELECT {lit} AS v").collect()[0].v
+    got = _fold_literal(lit)
+    assert got is not _EMPTY
+    assert got == want and type(got) is type(want)
+
+
+@pytest.mark.parametrize("lit", _NOT_FOLDED)
+def test_non_literals_still_reach_spark(spark, eng, lit):
+    """Decimals, doubles, arithmetic and out-of-int64 integers are left to
+    Spark, which evaluates them with its own types (2.5 is a Decimal)."""
+    from bayeslite_spark.engine import _EMPTY, _fold_literal
+
+    assert _fold_literal(lit) is _EMPTY
+    want = spark.sql(f"SELECT {lit} AS v").collect()[0].v
+    got = eng._eval_scalar(lit)
+    assert got == want and type(got) is type(want)
+
+
+def test_eval_scalar_subquery_not_folded(eng):
+    from bayeslite_spark.engine import _EMPTY, _fold_literal
+
+    sub = "(SIMULATE l_quantity FROM pop_li LIMIT 1)"
+    assert _fold_literal(sub) is _EMPTY
+    assert isinstance(eng._eval_scalar(sub), float)
+
+
+def _count_jobs(spark, fn):
+    """(fn(), Spark jobs fn launched), counting jobs from other threads
+    (no job group) as well as the caller's."""
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    group = f"jobguard-{uuid.uuid4().hex}"
+    drain()
+    untagged = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    drain()
+    extra = set(st.getJobIdsForGroup(None)) - untagged
+    return out, len(st.getJobIdsForGroup(group)) + len(extra)
+
+
+def test_bql_read_path_job_counts(spark, eng):
+    """Guard the jobs per BQL read: literal targets fold on the driver,
+    driver-built results are local relations, PAIRWISE similarity is one
+    self-join and nig_normal PREDICTIVE PROBABILITY runs no Python
+    worker."""
+    from bayeslite_spark.workload import get_queries
+
+    qs = get_queries()
+    names = ("x54_bql_density", "x55_bql_predictive_prob", "x58_bql_similarity",
+             "x60_bql_regress", "x63_bql_simulate_models")
+    for n in names:   # warm pass: lazy fits and caches resolve here
+        qs[n](spark, SF_SMOKE).collect()
+    jobs = {}
+    for n in names:
+        df, built = _count_jobs(spark, lambda n=n: qs[n](spark, SF_SMOKE))
+        _, collected = _count_jobs(spark, df.collect)
+        jobs[n] = built + collected
+    assert jobs["x54_bql_density"] == 0
+    assert jobs["x60_bql_regress"] == 0
+    assert jobs["x63_bql_simulate_models"] == 0
+    assert jobs["x58_bql_similarity"] <= 3
+    plan = qs["x55_bql_predictive_prob"](spark, SF_SMOKE)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+
+    from bayeslite_spark.engine import SparkBQL
+
+    fresh = SparkBQL(spark, seed=5)
+    fresh.register_table("supplier", eng.table("supplier"))
+    status = fresh.execute("CREATE POPULATION pjobs FOR supplier "
+                           "(s_suppkey KEY; s_acctbal NUMERICAL; IGNORE s_name, s_nationkey)")
+    rows, collected = _count_jobs(spark, status.collect)
+    assert len(rows) == 1 and collected == 0
+
+
+def _nig_pp_reference(models, col, xs):
+    """The per-row PREDICTIVE PROBABILITY the nig_normal pandas UDFs
+    computed (kept as the value oracle for the Catalyst expression):
+    numpy Gaussian logpdf + logmeanexp over models, or the per-model
+    category log-probabilities through mathutil.logmeanexp."""
+    import numpy as np
+
+    from bayeslite_spark.functions.mathutil import logmeanexp
+
+    if col in models[0]["numerical"]:
+        mus = np.array([m["numerical"][col]["mu"] for m in models])
+        sigmas = np.array([m["numerical"][col]["sigma"] for m in models])
+        x = np.array([np.nan if v is None else float(v) for v in xs])[:, None]
+        lps = (-np.log(sigmas)[None, :] - 0.5 * math.log(2 * math.pi)
+               - 0.5 * ((x - mus[None, :]) / sigmas[None, :]) ** 2)
+        mx = lps.max(axis=1, keepdims=True)
+        out = mx[:, 0] + np.log(np.exp(lps - mx).mean(axis=1))
+        return [None if v is None else float(o) for v, o in zip(xs, out)]
+    tables = [{c: math.log(p) if p > 0 else -math.inf
+               for c, p in zip(m["nominal"][col]["categories"],
+                               m["nominal"][col]["probs"])} for m in models]
+    return [None if v is None
+            else logmeanexp([t.get(str(v), -math.inf) for t in tables])
+            for v in xs]
+
+
+@pytest.mark.parametrize("col", ["c_acctbal", "c_mktsegment"])
+def test_nig_predictive_probability_values(eng, col):
+    """nig_normal single-column PREDICTIVE PROBABILITY over pop_cust (NULLs
+    injected in both columns): numerical within 1 ulp of the numpy
+    logmeanexp, nominal bit for bit, NULL in -> NULL out."""
+    import numpy as np
+
+    g = eng.catalog.generator("gen_cust")
+    models = [g.models[mn] for mn in sorted(g.models)]
+    rows = eng.execute(f"ESTIMATE {col} AS v, PREDICTIVE PROBABILITY OF {col} AS pp "
+                       "FROM pop_cust").collect()
+    xs = [r.v for r in rows]
+    assert any(v is None for v in xs)
+    want = _nig_pp_reference(models, col, xs)
+    for r, w in zip(rows, want):
+        if w is None:
+            assert r.pp is None
+        elif col == "c_mktsegment":
+            assert r.pp == w
+        else:
+            assert abs(r.pp - w) <= np.spacing(abs(w))
+
+
+def test_nig_predictive_probability_escaped_categories(spark):
+    """Categories holding a quote or a backslash still find their own
+    probability in the folded category map (never the unseen -inf)."""
+    from bayeslite_spark.engine import SparkBQL
+
+    e = SparkBQL(spark, seed=7)
+    cats = ["it's", "back\\slash", "plain"]
+    e.register_table("esc", spark.createDataFrame(
+        [(i, cats[i % 3]) for i in range(30)], "k long, c string"))
+    e.execute("CREATE POPULATION pesc FOR esc (k KEY; c NOMINAL)")
+    e.execute("CREATE GENERATOR gesc FOR pesc USING nig_normal")
+    e.execute("INITIALIZE 2 MODELS FOR gesc")
+    e.execute("ANALYZE gesc FOR 1 ITERATION")
+    rows = e.execute("ESTIMATE c, PREDICTIVE PROBABILITY OF c AS pp FROM pesc").collect()
+    assert {r.c for r in rows} == set(cats)
+    assert all(math.isfinite(r.pp) for r in rows)

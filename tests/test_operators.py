@@ -3828,6 +3828,17 @@ def test_distributed_rank_matches_window(spark):
     assert sorted(got.values()) == list(range(1, 2001))  # dense + unique
 
 
+def test_multi_rank_rejects_fractional_keys(spark):
+    """Keys are ranked as longs: a double key would truncate and give
+    wrong ranks, so it is refused up front."""
+    from bayeslite_spark.operators.analytics_queries import distributed_multi_rank
+
+    df = spark.createDataFrame([(1, 2, 0.5), (2, 1, 0.25)],
+                               "k long, a int, d double")
+    with pytest.raises(TypeError, match="integral"):
+        distributed_multi_rank(df, "k", {"ra": [F.col("a")], "rd": [F.col("d")]})
+
+
 def test_spearman_monotone_and_reference(spark):
     import numpy as np
 

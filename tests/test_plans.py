@@ -589,3 +589,19 @@ def test_global_window_guard_flags_partially_unparseable_tree():
         "+- Sort (2)\n"
         "   +- TakeOrderedAndProject (1)\n\n") + details
     assert unguarded_global_windows(guarded_tree) == []
+
+
+def test_broadcast_lint_exempts_local_relations(spark):
+    """A broadcast of driver-built rows (a LocalRelation) is bounded by
+    construction; a broadcast of a bare base-table scan is still flagged."""
+    from pyspark.sql import functions as F
+
+    from bayeslite_spark.plans.audit import unbounded_broadcast_subtrees
+    from bayeslite_spark.session import local_frame
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    params = local_frame(spark, [(1, 0.5)], "l_linenumber int, w double")
+    assert unbounded_broadcast_subtrees(
+        li.join(F.broadcast(params), "l_linenumber")) == []
+    assert unbounded_broadcast_subtrees(
+        params.join(F.broadcast(li), "l_linenumber"))
