@@ -1772,12 +1772,16 @@ def r70_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Distributed global ranking — the primitive a single-partition
 # row_number() window cannot give you at scale.  Two passes:
-# (1) range-partition on the order columns and count each partition
-# (bounded metadata: one row per partition); (2) re-walk the sorted
-# partitions adding each partition's exclusive-prefix offset to the
-# local position.  Every rank is exact and dense-unique under a
-# deterministic tie-break; no single task ever sees more than its
-# partition.  (The same shape Spark uses internally for zipWithIndex.)
+# (1) range-partition on the order columns, sort each partition, stamp
+# every row with its partition id and its index inside the partition,
+# and count each partition (bounded metadata: one row per partition);
+# (2) project rank = offset[partition] + index + 1, where the offsets
+# are the driver's exclusive prefix over the counts, inlined as one
+# array literal indexed by partition id.  Every rank is exact and
+# dense-unique under a deterministic tie-break; no single task ever
+# sees more than its partition, and the projection is a plain Catalyst
+# expression (no Python worker).  (The same shape Spark uses
+# internally for zipWithIndex.)
 #
 # A RANK_DRIVER_ROWS hybrid gate (the graph family's GRAPH_DRIVER_EDGES
 # pattern extended to this machinery: bounded limit-probe collect +
@@ -1789,6 +1793,45 @@ def r70_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without a measurable win (OPTIMIZATION_r09.md, tried-and-rejected).
 # ---------------------------------------------------------------------------
 
+# monotonically_increasing_id() is (partition index << 33) + the row's
+# index inside its partition; the low 33 bits are that index
+_POS_MASK = (1 << 33) - 1
+
+
+def _range_rank(df: DataFrame, order_exprs: list, rank_col: str):
+    """``(ranked, n)``: ``df`` plus a 1-based global ``rank_col`` under
+    the total order ``order_exprs``, and the row count.
+
+    ``_pid`` and ``_pos`` are stamped right after the sort and BEFORE
+    the checkpoint, so the stored index is the sorted position no
+    matter where the rank is projected later.  The checkpoint is taken
+    ONCE because repartitionByRange samples its boundaries per job:
+    without it the counting pass and the ranking pass can land on
+    DIFFERENT partitionings (observed at x30 — a pid the count pass
+    never saw).  On a cluster use reliable checkpoint()/cache; the job
+    shape is identical."""
+    parts = (
+        df.repartitionByRange(*order_exprs)
+        .sortWithinPartitions(*order_exprs)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_pos",
+                    F.monotonically_increasing_id().bitwiseAND(_POS_MASK))
+        .localCheckpoint(eager=True)
+    )
+    sizes = dict(tuple(r) for r in
+                 parts.groupBy("_pid").agg(F.count(F.lit(1))).collect())
+    # partition ids are dense (0..P-1): offsets[pid] is an O(1) array
+    # index per row, built in one expression (a pid with no rows gets
+    # the running total, which no row reads)
+    offsets, acc = [], 0
+    for pid in range(max(sizes, default=-1) + 1):
+        offsets.append(f"{acc}L")
+        acc += sizes.get(pid, 0)
+    offset = (F.expr(f"element_at(array({','.join(offsets)}), _pid + 1)")
+              if offsets else F.lit(0))
+    rank = (offset + F.col("_pos") + 1).cast("long")
+    return parts.withColumn(rank_col, rank).drop("_pid", "_pos"), acc
+
 
 def distributed_rank(df: DataFrame, order_cols: list,
                      rank_col: str = "rank") -> DataFrame:
@@ -1797,51 +1840,16 @@ def distributed_rank(df: DataFrame, order_cols: list,
     tie-break). Each element is a column name or a Column sort
     expression (e.g. ``F.col("total").desc()`` for descending rank —
     repartitionByRange and sortWithinPartitions both honor SortOrder
-    expressions, so DESC ranking needs no value negation)."""
-    import pandas as real_pd
+    expressions, so DESC ranking needs no value negation).
+
+    Jobs: the range shuffle and checkpoint, one per-partition count
+    collect, then the rank is a Catalyst projection over the
+    checkpoint (``_range_rank``)."""
     from pyspark.sql import Column
 
     order_exprs = [c if isinstance(c, Column) else F.col(c)
                    for c in order_cols]
-    parts = (
-        df.repartitionByRange(*order_exprs)
-        .sortWithinPartitions(*order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        # materialize ONCE: repartitionByRange samples its boundaries
-        # per job, so without this the counting pass and the ranking
-        # pass can land on DIFFERENT partitionings (observed at x30 —
-        # KeyError on a pid the count pass never saw). On a cluster use
-        # reliable checkpoint()/cache; the job shape is identical.
-        .localCheckpoint(eager=True)
-    )
-    sizes = {r["_pid"]: r["n"] for r in
-             parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-             .collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {rank_col} long"
-
-    def assign(it):
-        pos = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if pos is None:
-                pos = offsets[int(pdf["_pid"].iloc[0])]
-            ranks = range(pos + 1, pos + 1 + len(pdf))
-            pos += len(pdf)
-            out = pdf.drop(columns=["_pid"])
-            out[rank_col] = real_pd.Series(list(ranks), index=out.index,
-                                           dtype="int64")
-            yield out
-
-    return parts.mapInPandas(assign, out_schema)
+    return _range_rank(df, order_exprs, rank_col)[0]
 
 
 def distributed_ntile(df: DataFrame, order_cols: list, n: int,
@@ -1894,18 +1902,17 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
 
     Mechanism: stack ``len(specs)`` narrow copies of (block id, sort
     keys, key) — the §8 lightweight-proxy move — range-partition ONCE on
-    (block, keys..., key), walk the sorted partitions with the
-    distributed_rank offset pass, subtract ``block * N`` to recover each
-    block's 1-based rank, and pivot the blocks back to columns with one
-    hash aggregate on the key.  ``carry`` columns ride block 0 (null
-    elsewhere) so payload needed downstream crosses the shuffle once.
+    (block, keys..., key), number the rows with the distributed_rank
+    offset expression (``_range_rank``: no Python worker), subtract
+    ``block * N`` to recover each block's 1-based rank, and pivot the
+    blocks back to columns with one hash aggregate on the key.
+    ``carry`` columns ride block 0 (null elsewhere) so payload needed
+    downstream crosses the shuffle once.
 
     Returns ``(frame, n_rows)``: one row per input row with columns
     ``(key_col, *carry, *specs)``, and the exact row count (free from
     the offset collect — callers that need N skip a count job).
     """
-    import pandas as real_pd
-
     from pyspark.sql.types import IntegralType
 
     carry = list(carry or ())
@@ -1938,48 +1945,12 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
     order_exprs = ([F.col("_blk")]
                    + [F.col(f"_k{j}") for j in range(arity)]
                    + [F.col(key_col)])
-    parts = (
-        stacked.repartitionByRange(*order_exprs)
-        .sortWithinPartitions(*order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        # materialize ONCE — same reason as distributed_rank: the range
-        # partitioner samples per job, so the counting pass and the
-        # ranking pass must see the SAME partitioning
-        .localCheckpoint(eager=True)
-    )
-    sizes = {r["_pid"]: r["n"] for r in
-             parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-             .collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
+    ranked, total = _range_rank(stacked, order_exprs, "_r")
     n_blocks = len(names)
-    if acc % n_blocks:
+    if total % n_blocks:
         raise AssertionError("distributed_multi_rank: ragged blocks")
-    n_rows = acc // n_blocks
+    n_rows = total // n_blocks
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in parts.schema.fields if f.name != "_pid"
-    ) + ", _r long"
-
-    def assign(it):
-        pos = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if pos is None:
-                pos = offsets[int(pdf["_pid"].iloc[0])]
-            ranks = range(pos + 1, pos + 1 + len(pdf))
-            pos += len(pdf)
-            out = pdf.drop(columns=["_pid"])
-            out["_r"] = real_pd.Series(list(ranks), index=out.index,
-                                       dtype="int64")
-            yield out
-
-    ranked = parts.mapInPandas(assign, out_schema)
     aggs = [F.max(F.when(F.col("_blk") == i,
                          F.col("_r") - F.lit(i * n_rows)))
             .cast("long").alias(name) for i, name in enumerate(names)]
@@ -3774,66 +3745,75 @@ def _theil_sen_select_ranks(d, c, ks, chunk: int = 2048,
                 np.divide(cc, dd, out=cc)
                 fn(keys_of(pool_c[:sz]))
 
-    lo, hi = 0, (1 << 64) - 1          # inclusive uint64 key interval
-    below = 0                          # keys strictly below lo
-    while True:
-        width = hi - lo + 1
-        shift = 0
-        while (width - 1) >> shift >= (1 << 16):
-            shift += 1
-        nb = ((width - 1) >> shift) + 1
-        counts = np.zeros(int(nb), dtype=np.int64)
+    def select(lo, hi, below, ks):
+        # ``lo, hi``: inclusive uint64 key interval holding every rank in
+        # ``ks``; ``below``: keys strictly below ``lo``
+        while True:
+            width = hi - lo + 1
+            shift = 0
+            while (width - 1) >> shift >= (1 << 16):
+                shift += 1
+            nb = ((width - 1) >> shift) + 1
+            counts = np.zeros(int(nb), dtype=np.int64)
+            lo_u, hi_u = np.uint64(lo), np.uint64(hi)
+            sh = np.uint64(shift)
+            full = lo == 0 and hi == (1 << 64) - 1
+
+            def tally(keys):
+                if full:
+                    sel = keys      # first pass: no filtering, mutate
+                else:
+                    sel = keys[(keys >= lo_u) & (keys <= hi_u)]
+                    np.subtract(sel, lo_u, out=sel)
+                np.right_shift(sel, sh, out=sel)
+                # bucket ids are < 2^16, so the uint64->int64 reinterpret
+                # is safe and copy-free
+                counts[:] += np.bincount(sel.view(np.int64),
+                                         minlength=len(counts))
+
+            for_each_chunk(tally)
+            cum = np.cumsum(counts)
+            if shift == 0:
+                # buckets ARE exact keys: answer from the histogram (also
+                # covers duplicate-heavy series — e.g. a perfectly linear
+                # one, where every slope is the same value and a collect
+                # pass would materialize the whole multiset)
+                return [key_to_float(
+                    lo + int(np.searchsorted(cum, k - below))) for k in ks]
+            r_min, r_max = ks[0] - below, ks[-1] - below
+            b1 = int(np.searchsorted(cum, r_min))
+            b2 = int(np.searchsorted(cum, r_max))
+            new_lo = lo + (b1 << shift)
+            new_hi = min(hi, lo + ((b2 + 1) << shift) - 1)
+            new_below = below + (int(cum[b1 - 1]) if b1 > 0 else 0)
+            cand = int(cum[b2]) - (int(cum[b1 - 1]) if b1 > 0 else 0)
+            if cand > limit and (new_lo, new_hi) == (lo, hi):
+                # no progress: the ranks sit in the first and last bucket
+                # and too many keys lie between them.  Narrow each rank on
+                # its own — a single rank always shrinks to one bucket.
+                return [v for k in ks
+                        for v in select(lo, hi, below, [k])]
+            lo, hi, below = new_lo, new_hi, new_below
+            if cand <= limit:
+                break
+
+        vals = []
         lo_u, hi_u = np.uint64(lo), np.uint64(hi)
-        sh = np.uint64(shift)
-        full = lo == 0 and hi == (1 << 64) - 1
 
-        def tally(keys):
-            if full:
-                sel = keys          # first pass: no filtering, mutate
-            else:
-                sel = keys[(keys >= lo_u) & (keys <= hi_u)]
-                np.subtract(sel, lo_u, out=sel)
-            np.right_shift(sel, sh, out=sel)
-            # bucket ids are < 2^16, so the uint64->int64 reinterpret
-            # is safe and copy-free
-            counts[:] += np.bincount(sel.view(np.int64),
-                                     minlength=len(counts))
+        def collect(keys):
+            m = (keys >= lo_u) & (keys <= hi_u)
+            if m.any():
+                # invert the key map back to float64
+                k = keys[m]
+                neg = (k & sign) == np.uint64(0)
+                u = np.where(neg, ~k, k & ~sign)
+                vals.append(u.view(np.float64))
 
-        for_each_chunk(tally)
-        cum = np.cumsum(counts)
-        if shift == 0:
-            # buckets ARE exact keys: answer from the histogram (also
-            # covers duplicate-heavy series — e.g. a perfectly linear
-            # one, where every slope is the same value and a collect
-            # pass would materialize the whole multiset)
-            return [key_to_float(lo + int(np.searchsorted(cum, k - below)))
-                    for k in ks]
-        r_min, r_max = ks[0] - below, ks[-1] - below
-        b1 = int(np.searchsorted(cum, r_min))
-        b2 = int(np.searchsorted(cum, r_max))
-        new_lo = lo + (b1 << shift)
-        new_hi = min(hi, lo + ((b2 + 1) << shift) - 1)
-        below += int(cum[b1 - 1]) if b1 > 0 else 0
-        cand = int(cum[b2]) - (int(cum[b1 - 1]) if b1 > 0 else 0)
-        lo, hi = new_lo, new_hi
-        if cand <= limit:
-            break
+        for_each_chunk(collect)
+        cands = np.sort(np.concatenate(vals))
+        return [float(cands[k - below - 1]) for k in ks]
 
-    vals = []
-    lo_u, hi_u = np.uint64(lo), np.uint64(hi)
-
-    def collect(keys):
-        m = (keys >= lo_u) & (keys <= hi_u)
-        if m.any():
-            # invert the key map back to float64
-            k = keys[m]
-            neg = (k & sign) == np.uint64(0)
-            u = np.where(neg, ~k, k & ~sign)
-            vals.append(u.view(np.float64))
-
-    for_each_chunk(collect)
-    cands = np.sort(np.concatenate(vals))
-    return [float(cands[k - below - 1]) for k in ks]
+    return select(0, (1 << 64) - 1, 0, list(ks))
 
 
 def theil_sen(daily: DataFrame) -> DataFrame:

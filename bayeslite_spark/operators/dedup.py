@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bayeslite_spark.session import local_frame
 from bayeslite_spark.workload import _t, fan_out, register
 
 _Q30_ORACLE = """
@@ -690,8 +691,8 @@ def _components_driver(spark, edge_rows) -> DataFrame:
         if a != b:
             parent[max(a, b)] = min(a, b)
     out = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(
-        [(d, c, 1 if d == c else 0) for d, c in out],
+    return local_frame(
+        spark, [(d, c, 1 if d == c else 0) for d, c in out],
         "doc_id long, component long, is_survivor long",
     )
 
@@ -1315,8 +1316,8 @@ def pagerank_with_stats(edges: DataFrame, damping: float = PR_DAMPING,
         ranks_rows, n_iters = _pagerank_driver(
             [(int(r[0]), int(r[1])) for r in ed.collect()],
             damping=damping, iters=iters, tol=tol)
-        return (edges.sparkSession.createDataFrame(
-            ranks_rows, "node long, rank double"), n_iters)
+        return (local_frame(edges.sparkSession, ranks_rows,
+                            "node long, rank double"), n_iters)
     directed = _truncate(
         ed.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(ed.select(F.col("b").alias("src"),
@@ -1325,8 +1326,8 @@ def pagerank_with_stats(edges: DataFrame, damping: float = PR_DAMPING,
         directed.select(F.col("src").alias("node")).distinct(), ckpt)
     n = nodes.count()
     if n == 0:
-        return (edges.sparkSession.createDataFrame(
-            [], "node long, rank double"), 0)
+        return (local_frame(
+            edges.sparkSession, [], "node long, rank double"), 0)
     deg = _truncate(
         directed.groupBy("src").agg(
             F.count(F.lit(1)).cast("double").alias("deg")), ckpt)
@@ -1515,7 +1516,8 @@ def triangle_census(pairs: DataFrame) -> DataFrame:
         n_wedges = sum(d * (d - 1) // 2 for d in deg.values())
         clustering = (0.0 if n_wedges == 0
                       else (3.0 * tri) / n_wedges)
-        return pairs.sparkSession.createDataFrame(
+        return local_frame(
+            pairs.sparkSession,
             [(n_nodes, n_edges, n_wedges, tri, clustering)],
             "n_nodes long, n_edges long, n_wedges long, "
             "n_triangles long, global_clustering double")
@@ -1615,14 +1617,14 @@ def kcore(edges: DataFrame, k: int = 2,
                 break
             cur_e, m_edges = nxt_e, len(nxt_e)
         if m_edges == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "node long, core_deg long")
+            return local_frame(
+                edges.sparkSession, [], "node long, core_deg long")
         core: dict[int, int] = {}
         for a, b in cur_e:
             core[a] = core.get(a, 0) + 1
             core[b] = core.get(b, 0) + 1
-        return edges.sparkSession.createDataFrame(
-            sorted(core.items()), "node long, core_deg long")
+        return local_frame(edges.sparkSession, sorted(core.items()),
+                           "node long, core_deg long")
     for i in range(max_rounds):
         if n_edges == 0:
             break
@@ -1643,8 +1645,8 @@ def kcore(edges: DataFrame, k: int = 2,
             break
         cur, n_edges = nxt, m
     if n_edges == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node long, core_deg long")
+        return local_frame(
+            edges.sparkSession, [], "node long, core_deg long")
     sym = cur.select(F.col("a").alias("node")).unionByName(
         cur.select(F.col("b").alias("node")))
     return sym.groupBy("node").agg(
@@ -2263,8 +2265,8 @@ def bfs_distances(pairs: DataFrame, max_depth: int = BFS_MAX_DEPTH,
                 frontier = nxt
             for d in dist.values():
                 hist[d] = hist.get(d, 0) + 1
-        return pairs.sparkSession.createDataFrame(
-            sorted(hist.items()), "distance long, n_nodes long")
+        return local_frame(pairs.sparkSession, sorted(hist.items()),
+                           "distance long, n_nodes long")
     comp = neardup_components(pairs).select(
         F.col("doc_id").alias("node"), F.col("component").alias("seed"))
     sym = edges.unionByName(

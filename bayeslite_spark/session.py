@@ -57,7 +57,35 @@ def get_spark(app_name: str = "bayeslite_spark", shuffle_partitions: int | None 
         .config("spark.ui.enabled",
                 "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark.sparkContext)
+    return spark
+
+
+def _ship_package(sc) -> None:
+    """Put the package's parent directory first on the executors' Python
+    path, so pandas UDFs and ``mapInPandas`` operators import
+    ``bayeslite_spark`` whatever the working directory.
+
+    ``sc.environment`` is the worker environment that
+    ``spark.executorEnv.*`` fills and that every Python function ships
+    with, so this also reaches a session that already exists; any
+    configured ``spark.executorEnv.PYTHONPATH`` stays after it.
+
+    The path is the driver's own, so this serves executors that share
+    the driver's filesystem (local mode). Executors on other hosts need
+    the package shipped to them, e.g. as a zip through ``addPyFile``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # the workers start in the JVM's working directory, which is on
+    # their sys.path: from the package's parent they import it already,
+    # so leave their environment as it is
+    jvm_cwd = sc._jvm.java.lang.System.getProperty("user.dir")
+    if os.path.realpath(jvm_cwd) == os.path.realpath(root):
+        return
+    prior = sc.environment.get("PYTHONPATH", "")
+    paths = [p for p in prior.split(os.pathsep) if p]
+    if root not in paths:
+        sc.environment["PYTHONPATH"] = os.pathsep.join([root, *paths])
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -23,3 +23,25 @@ def spark():
 
     s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+def count_jobs(spark, fn):
+    """(fn(), Spark jobs fn launched), counting jobs from other threads
+    (no job group) as well as the caller's."""
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    group = f"jobguard-{uuid.uuid4().hex}"
+    drain()
+    untagged = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    drain()
+    extra = set(st.getJobIdsForGroup(None)) - untagged
+    return out, len(st.getJobIdsForGroup(group)) + len(extra)

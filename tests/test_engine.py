@@ -9,7 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -1288,28 +1288,6 @@ def test_eval_scalar_subquery_not_folded(eng):
     assert isinstance(eng._eval_scalar(sub), float)
 
 
-def _count_jobs(spark, fn):
-    """(fn(), Spark jobs fn launched), counting jobs from other threads
-    (no job group) as well as the caller's."""
-    import uuid
-
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
-    group = f"jobguard-{uuid.uuid4().hex}"
-    drain()
-    untagged = set(st.getJobIdsForGroup(None))
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    drain()
-    extra = set(st.getJobIdsForGroup(None)) - untagged
-    return out, len(st.getJobIdsForGroup(group)) + len(extra)
-
-
 def test_bql_read_path_job_counts(spark, eng):
     """Guard the jobs per BQL read: literal targets fold on the driver,
     driver-built results are local relations, PAIRWISE similarity is one
@@ -1324,8 +1302,8 @@ def test_bql_read_path_job_counts(spark, eng):
         qs[n](spark, SF_SMOKE).collect()
     jobs = {}
     for n in names:
-        df, built = _count_jobs(spark, lambda n=n: qs[n](spark, SF_SMOKE))
-        _, collected = _count_jobs(spark, df.collect)
+        df, built = count_jobs(spark, lambda n=n: qs[n](spark, SF_SMOKE))
+        _, collected = count_jobs(spark, df.collect)
         jobs[n] = built + collected
     assert jobs["x54_bql_density"] == 0
     assert jobs["x60_bql_regress"] == 0
@@ -1341,7 +1319,7 @@ def test_bql_read_path_job_counts(spark, eng):
     fresh.register_table("supplier", eng.table("supplier"))
     status = fresh.execute("CREATE POPULATION pjobs FOR supplier "
                            "(s_suppkey KEY; s_acctbal NUMERICAL; IGNORE s_name, s_nationkey)")
-    rows, collected = _count_jobs(spark, status.collect)
+    rows, collected = count_jobs(spark, status.collect)
     assert len(rows) == 1 and collected == 0
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 def test_word_shingles_short_texts(spark):
@@ -1084,6 +1084,10 @@ def test_group_split_no_cross_split_pairs(spark):
                        F.col("bkt").alias("b1"))
     crossing = (pairs.join(a0, "doc_id_0").join(a1, "doc_id_1")
                 .filter(F.col("b0") != F.col("b1")).count())
+    # the driver-side components are a local relation: left cached, it
+    # would serve every later equal q71 frame through a Spark job
+    comps.unpersist()
+    pairs.unpersist()
     assert crossing == 0
 
 
@@ -2976,6 +2980,43 @@ def test_graph_driver_and_distributed_paths_agree(spark):
         assert driver[k] == dist[k], k
 
 
+def test_graph_gates_agree_on_empty_results(spark):
+    """Both sides of all six graph gates give the same types and rows
+    when the result is empty or degenerate: the empty graph for every
+    gate, and a tree, whose 2-core peels away entirely."""
+    import bayeslite_spark.operators.dedup as dd
+
+    def graph(edges):
+        return (spark.createDataFrame(edges, "a long, b long"),
+                spark.createDataFrame(edges, "doc_id_0 long, doc_id_1 long"))
+
+    def runs(edges, threshold):
+        df, pair_df = graph(edges)
+        outs = {
+            "components": dd.neardup_components(
+                pair_df, driver_threshold=threshold),
+            "pagerank": dd.pagerank(df),
+            "kcore": dd.kcore(df, k=2),
+            "lpa": dd.label_propagation(df),
+            "triangles": dd.triangle_census(df),
+            "bfs": dd.bfs_distances(pair_df),
+        }
+        return {k: (o.dtypes, sorted(map(tuple, o.collect())))
+                for k, o in outs.items()}
+
+    saved = dd.GRAPH_DRIVER_EDGES
+    try:
+        for edges in ([], [(1, 2), (2, 3), (3, 4), (2, 5)]):
+            dd.GRAPH_DRIVER_EDGES = 10**9
+            driver = runs(edges, 10**9)
+            dd.GRAPH_DRIVER_EDGES = -1
+            dist = runs(edges, -1)
+            assert driver == dist, edges
+            assert driver["kcore"][1] == []
+    finally:
+        dd.GRAPH_DRIVER_EDGES = saved
+
+
 def test_kcore_matches_python_peel(spark):
     """Distributed k-core peel equals a pure-Python reference on a graph
     with a triangle (survives 2-core), a pendant chain (peels), and a
@@ -3837,6 +3878,107 @@ def test_multi_rank_rejects_fractional_keys(spark):
                                "k long, a int, d double")
     with pytest.raises(TypeError, match="integral"):
         distributed_multi_rank(df, "k", {"ra": [F.col("a")], "rd": [F.col("d")]})
+
+
+def _row_number(df, *order):
+    from pyspark.sql.window import Window as W
+
+    return {r.id: r.rk for r in
+            df.withColumn("rk", F.row_number().over(W.orderBy(*order)))
+            .collect()}
+
+
+def _with_confs(spark, confs, fn):
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        return fn()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_distributed_rank_partition_shapes(spark):
+    """The rank is offset[partition] + index inside the partition + 1:
+    exact against row_number() when a range partition is empty, when one
+    partition holds more than one Arrow batch's worth of rows (10,000),
+    when all rows share one partition, under a desc() Column order, and
+    on an empty frame."""
+    import numpy as np
+
+    from bayeslite_spark.operators.analytics_queries import distributed_rank
+
+    def rank(df, order):
+        return {r.id: r.rank for r in distributed_rank(df, order).collect()}
+
+    # AQE off (it would coalesce the empty partition away): a two-value
+    # key makes the range bounds [0, 1], so the partition above 1 is
+    # empty.  Ties leave the row order open, so compare rank -> value.
+    dup = spark.createDataFrame([(i, i % 2) for i in range(40)],
+                                "id long, v long")
+    no_aqe = {"spark.sql.adaptive.enabled": "false"}
+    sizes = _with_confs(spark, no_aqe, lambda: dup.repartitionByRange(
+        "v").rdd.glom().map(len).collect())
+    assert 0 in sizes
+    got = _with_confs(spark, no_aqe, lambda: {
+        r.rank: r.v for r in distributed_rank(dup, ["v"]).collect()})
+    assert got == {i + 1: int(i >= 20) for i in range(40)}
+
+    rng = np.random.default_rng(5)
+    rows = [(i, int(v)) for i, v in enumerate(rng.integers(0, 400, 24_000))]
+    big = spark.createDataFrame(rows, "id long, v long")
+    want = _row_number(big, "v", "id")
+    two = _with_confs(spark, {"spark.sql.shuffle.partitions": "2"},
+                      lambda: rank(big.repartition(5), ["v", "id"]))
+    assert two == want
+    one = _with_confs(spark, {"spark.sql.shuffle.partitions": "1"},
+                      lambda: rank(big, ["v", "id"]))
+    assert one == want
+    desc = rank(big.repartition(7), [F.col("v").desc(), "id"])
+    assert desc == _row_number(big, F.col("v").desc(), "id")
+    assert distributed_rank(big.limit(0), ["v", "id"]).collect() == []
+
+
+def test_multi_rank_with_carry_equals_window_ranks(spark):
+    """Two orders ranked with one shuffle, carry payload riding block 0:
+    each rank equals its own row_number() window, and the carry column
+    and the row count come back intact."""
+    import numpy as np
+
+    from bayeslite_spark.operators.analytics_queries import distributed_multi_rank
+
+    rng = np.random.default_rng(17)
+    rows = [(i, int(a), int(b), f"p{i}") for i, (a, b) in
+            enumerate(rng.integers(-30, 30, (3_000, 2)))]
+    df = spark.createDataFrame(rows, "id long, a long, b int, pay string")
+    ranked, n = distributed_multi_rank(
+        df.repartition(9), "id",
+        {"ra": [F.col("a")], "rb": [-F.col("b")]}, carry=["pay"])
+    got = {r.id: (r.ra, r.rb, r.pay) for r in ranked.collect()}
+    ra = _row_number(df, "a", "id")
+    rb = _row_number(df, F.col("b").desc(), "id")
+    assert n == len(rows)
+    assert got == {i: (ra[i], rb[i], f"p{i}") for i in range(len(rows))}
+
+
+def test_rank_and_graph_gate_plans_run_no_python_worker(spark):
+    """q01, q71 and r71 execute without a Python worker (the rank is a
+    Catalyst projection, the graph gate's result a local relation), and
+    collecting q71's driver-side result runs no Spark job."""
+    from bayeslite_spark.workload import get_queries
+
+    qs = get_queries()
+    for name in ("q01_pricing_summary", "q71_neardup_components",
+                 "r71_spearman"):
+        df = qs[name](spark, SF_SMOKE)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (name, node)
+    q71 = qs["q71_neardup_components"](spark, SF_SMOKE)
+    rows, jobs = count_jobs(spark, q71.collect)
+    assert rows and jobs == 0
 
 
 def test_spearman_monotone_and_reference(spark):

@@ -7,6 +7,8 @@ sort at sizes where both run, (2) duplicate-heavy series resolve via
 the exact-key histogram without a giant collect, and (3) a synthetic
 50,000-day series completes without driver OOM."""
 
+import signal
+
 import numpy as np
 
 from bayeslite_spark.operators.analytics_queries import (
@@ -69,6 +71,29 @@ def test_duplicate_heavy_series_resolves_from_histogram():
     got = _theil_sen_select_ranks(d, c, [(m + 1) // 2, (m + 2) // 2],
                                   limit=10)
     assert got == [5.0, 5.0]
+
+
+def test_two_value_middle_ranks_terminate():
+    # the two middle ranks fall on distinct slopes in the first and last
+    # bucket of the interval with more keys between them than ``limit``:
+    # a joint narrowing pass cannot shrink (lo, hi), so each rank must
+    # narrow on its own.  This looped forever before; SIGALRM bounds it.
+    d = np.array([0, 1, 3, 4, 7, 8, 15, 18], dtype=np.int64)
+    c = np.array([1, 0, 1, 5, -2, 3, 2, -5], dtype=np.int64)
+
+    def _timeout(signum, frame):
+        raise TimeoutError("_theil_sen_select_ranks did not terminate")
+
+    old = signal.signal(signal.SIGALRM, _timeout)
+    signal.alarm(20)
+    try:
+        for limit in (0, 1, 5):
+            for ks in ([14, 15], [1, 28], [3, 20], [9]):
+                assert _theil_sen_select_ranks(d, c, ks, limit=limit) \
+                    == _direct(d, c, ks), (limit, ks)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
 
 
 def test_50k_day_series_completes_without_oom():
