@@ -1913,10 +1913,26 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
     ``(key_col, *carry, *specs)``, and the exact row count (free from
     the offset collect — callers that need N skip a count job).
     """
+    ranked, n_rows = _rank_stacked(df, key_col, specs, carry)
+    aggs = [F.max(F.when(F.col("_blk") == i,
+                         F.col("_r") - F.lit(i * n_rows)))
+            .cast("long").alias(name) for i, name in enumerate(specs)]
+    aggs += [F.max(F.when(F.col("_blk") == 0, F.col(c))).alias(c)
+             for c in carry or ()]
+    return ranked.groupBy(key_col).agg(*aggs), n_rows
+
+
+def _rank_stacked(df: DataFrame, key_col: str, specs: "dict[str, list]",
+                  carry: "list[str] | None" = None):
+    """``(ranked, n_rows)``: the blocks of ``distributed_multi_rank``
+    stacked and ranked with one ``_range_rank``.  Block ``i`` holds spec
+    ``i``'s rows as ``(_blk, _k0.._k{arity-1}, key_col, *carry)``, the
+    keys cast to long and ``carry`` non-null in block 0 only; ``_r`` is
+    the rank under ``(_blk, keys..., key_col)``, so block ``i``'s own
+    1-based rank is ``_r - i * n_rows``."""
     from pyspark.sql.types import IntegralType
 
     carry = list(carry or ())
-    names = list(specs)
     arity = len(next(iter(specs.values())))
     carry_types = {f.name: f.dataType for f in df.schema.fields
                    if f.name in carry}
@@ -1929,8 +1945,7 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
                         f"got {', '.join(bad)}")
 
     stacked = None
-    for i, name in enumerate(names):
-        cols = specs[name]
+    for i, cols in enumerate(specs.values()):
         if len(cols) != arity:
             raise ValueError("distributed_multi_rank: uneven spec arity")
         sel = [F.lit(i).alias("_blk")]
@@ -1941,22 +1956,13 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
                         else F.lit(None).cast(carry_types[c])).alias(c))
         part = df.select(*sel)
         stacked = part if stacked is None else stacked.unionByName(part)
-
     order_exprs = ([F.col("_blk")]
                    + [F.col(f"_k{j}") for j in range(arity)]
                    + [F.col(key_col)])
     ranked, total = _range_rank(stacked, order_exprs, "_r")
-    n_blocks = len(names)
-    if total % n_blocks:
+    if total % len(specs):
         raise AssertionError("distributed_multi_rank: ragged blocks")
-    n_rows = total // n_blocks
-
-    aggs = [F.max(F.when(F.col("_blk") == i,
-                         F.col("_r") - F.lit(i * n_rows)))
-            .cast("long").alias(name) for i, name in enumerate(names)]
-    aggs += [F.max(F.when(F.col("_blk") == 0, F.col(c))).alias(c)
-             for c in carry]
-    return ranked.groupBy(key_col).agg(*aggs), n_rows
+    return ranked, total // len(specs)
 
 
 def ntile_of_rank(rank_col: str, n: int, n_rows: int):
@@ -1983,11 +1989,11 @@ def ntile_of_rank(rank_col: str, n: int, n_rows: int):
 # Pearson-on-ranks arithmetic is fixed-order IEEE).  Computed over
 # per-customer order count vs total spend.
 #
-# Scale: ranking is the two-pass distributed_rank above (never a
+# Scale: both orders are ranked by one stacked range rank (never a
 # global-order window); tie-group average ranks come from ONE
-# groupBy(value) over the ranked table ((first+last)/2 of a contiguous
-# run = min + (cnt-1)/2); the correlation is a 1-row aggregate of
-# exact sums.
+# groupBy(block, value) over the ranked blocks ((first+last)/2 of a
+# contiguous run = min + (cnt-1)/2); the correlation is a 1-row
+# aggregate of exact sums.
 # ---------------------------------------------------------------------------
 
 _R71_ORACLE = """
@@ -2013,38 +2019,33 @@ FROM ranked
 """
 
 
-def _avg_ranks(ranked: DataFrame, value_col: str, rank_col: str,
-               out_col: str) -> DataFrame:
-    """Tie-group average rank: ranks of equal values are contiguous
-    under the deterministic tie-break, so avg = min + (cnt-1)/2."""
-    g = ranked.groupBy(value_col).agg(
-        F.min(rank_col).alias("_mn"), F.count(F.lit(1)).alias("_c"))
-    return ranked.join(g, value_col).withColumn(
-        out_col, F.col("_mn") + (F.col("_c") - 1) / 2.0
-    ).drop("_mn", "_c")
-
-
 def spearman(df: DataFrame, x_col: str, y_col: str,
              key_col: str) -> DataFrame:
     """(n, rho): Spearman rank correlation with average ranks (exact
     dyadic arithmetic; deterministic across engines).
 
-    Round 10 (guide §2.4): the two global ranks (by x, by y) shared no
-    work — two distributed_rank passes = two range shuffles + two
-    localCheckpoints + two partition-count collects over the same
-    customer-grain rows.  distributed_multi_rank stacks both orders
-    into ONE range shuffle and pivots the ranks back; the rank values
-    are identical (same total orders, same offset walk), so the dyadic
-    average-rank arithmetic downstream is bit-identical."""
-    ranked, _n = distributed_multi_rank(
+    ``x`` and ``y`` are ranked as two stacked blocks with one range
+    shuffle (``_rank_stacked``).  Ranks of equal values are contiguous
+    under the key tie-break, so ONE ``groupBy(block, value)`` over the
+    ranked blocks gives each value's average rank, ``first + (cnt-1)/2``;
+    block 0, which carries ``y``, joins both tie tables into the final
+    1-row aggregate of exact sums.  Values must be integral, as for
+    ``distributed_multi_rank``."""
+    ranked, n_rows = _rank_stacked(
         df.select(key_col, x_col, y_col), key_col,
-        {"rn": [F.col(x_col)], "rc": [F.col(y_col)]},
-        carry=[x_col, y_col])
-    # the pivot feeds four plan branches (two tie-group aggregates +
-    # their join-backs): materialize it once
-    rxy = ranked.localCheckpoint(eager=True)
-    a = _avg_ranks(rxy, x_col, "rn", "rx")
-    b = _avg_ranks(a, y_col, "rc", "ry")
+        {"x": [F.col(x_col)], "y": [F.col(y_col)]}, carry=[y_col])
+    blk = F.col("_blk").cast("long")
+    ties = ranked.groupBy("_blk", "_k0").agg(
+        (F.min("_r") - blk * n_rows
+         + (F.count(F.lit(1)) - 1) / 2.0).alias("_avg"))
+    rx = ties.where(F.col("_blk") == 0).select(
+        F.col("_k0").alias("_x"), F.col("_avg").alias("rx"))
+    ry = ties.where(F.col("_blk") == 1).select(
+        F.col("_k0").alias("_y"), F.col("_avg").alias("ry"))
+    b = (ranked.where(F.col("_blk") == 0)
+         .select(F.col("_k0").alias("_x"),
+                 F.col(y_col).cast("long").alias("_y"))
+         .join(rx, "_x").join(ry, "_y"))
     n = F.count(F.lit(1))
     num = n * F.sum(F.col("rx") * F.col("ry")) - F.sum("rx") * F.sum("ry")
     den = F.sqrt(

@@ -19,7 +19,7 @@ beyond-parity pipeline operators required by BASELINE.json's north star.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -698,7 +698,8 @@ def _components_driver(spark, edge_rows) -> DataFrame:
 
 
 def neardup_components(pairs: DataFrame, max_iter: int = 25,
-                       driver_threshold: int = 200_000) -> DataFrame:
+                       driver_threshold: int = 200_000,
+                       checkpoint_dir: str | None = None) -> DataFrame:
     """(doc_id, component, is_survivor) for every doc in the pair graph.
 
     ``component`` is the min doc_id of the connected component;
@@ -712,7 +713,8 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     large-star/small-star contraction, which converges in O(log n)
     rounds even on adversarial chain graphs; raises if the edge set has
     not reached the star fixpoint within ``max_iter`` rounds. Both paths
-    produce identical output (equality-tested)."""
+    produce identical output (equality-tested). ``checkpoint_dir``: see
+    ``_truncate``."""
     nodes = (
         pairs.select(F.col("doc_id_0").alias("doc_id"))
         .union(pairs.select("doc_id_1"))
@@ -720,24 +722,21 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     )
     # Each round references the previous edge set ~4× (symmetrize +
     # join + union), so without lineage truncation the logical plan
-    # grows 4^rounds and Catalyst analysis OOMs. localCheckpoint
-    # materializes each round and cuts the plan flat — on a real
-    # cluster swap for reliable `checkpoint()` to HDFS for fault
-    # tolerance; the per-round job shape is identical.
-    edges = (
+    # grows 4^rounds and Catalyst analysis OOMs. _truncate materializes
+    # each round and cuts the plan flat, and the edge counts come from
+    # the same jobs.
+    edges, n_edges = _truncate_counted(
         pairs.select(
             F.greatest("doc_id_0", "doc_id_1").alias("u"),
             F.least("doc_id_0", "doc_id_1").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct(),
+        checkpoint_dir,
     )
-    n_edges = edges.count()
     if n_edges <= driver_threshold:
         return _components_driver(pairs.sparkSession, edges.collect())
     for _ in range(max_iter):
-        new = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        n_new = new.count()
+        new, n_new = _truncate_counted(
+            _small_star(_large_star(edges)), checkpoint_dir)
         # Fixpoint: the edge set is stable (same size, nothing new) —
         # a union of stars centred on each component's global min.
         changed = 1 if n_new != n_edges else new.subtract(edges).count()
@@ -1236,10 +1235,29 @@ def _truncate(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     differs."""
     if checkpoint_dir is not None:
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
+        # the directory is per context, and Spark checkpoints into a
+        # fresh subdirectory of the one set: set it unless it is this
+        # call's directory already
+        path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+        want = path.getFileSystem(sc._jsc.hadoopConfiguration()) \
+            .makeQualified(path).toString()
+        cur = sc._jsc.sc().getCheckpointDir()
+        if cur.isEmpty() or sc._jvm.org.apache.hadoop.fs.Path(
+                cur.get()).getParent().toString() != want:
             sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def _truncate_counted(df: DataFrame,
+                      checkpoint_dir: str | None = None) -> tuple:
+    """``(frame, n_rows)``: ``_truncate(df)`` plus its row count, observed
+    by the job that materializes it (``DataFrame.observe``), so a size
+    gate reads the count without running a ``count()`` job of its own."""
+    obs = Observation()
+    out = _truncate(
+        df.observe(obs, F.count(F.lit(1)).alias("n")), checkpoint_dir)
+    return out, obs.get["n"]
 
 
 def _pagerank_driver(edge_list: list, damping: float, iters: int,
@@ -1310,8 +1328,7 @@ def pagerank_with_stats(edges: DataFrame, damping: float = PR_DAMPING,
     # references its input twice, so symmetrizing the raw lineage would
     # evaluate the upstream pair computation (for the registered q31
     # graph, the whole shingle self-join) TWICE in one checkpoint job
-    ed = _truncate(edges.select("a", "b"), ckpt)
-    n_edges = ed.count()
+    ed, n_edges = _truncate_counted(edges.select("a", "b"), ckpt)
     if n_edges <= GRAPH_DRIVER_EDGES:
         ranks_rows, n_iters = _pagerank_driver(
             [(int(r[0]), int(r[1])) for r in ed.collect()],
@@ -1322,9 +1339,8 @@ def pagerank_with_stats(edges: DataFrame, damping: float = PR_DAMPING,
         ed.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(ed.select(F.col("b").alias("src"),
                                F.col("a").alias("dst"))), ckpt)
-    nodes = _truncate(
+    nodes, n = _truncate_counted(
         directed.select(F.col("src").alias("node")).distinct(), ckpt)
-    n = nodes.count()
     if n == 0:
         return (local_frame(
             edges.sparkSession, [], "node long, rank double"), 0)
@@ -1484,15 +1500,17 @@ FROM wn CROSS JOIN ec CROSS JOIN tri
 """
 
 
-def triangle_census(pairs: DataFrame) -> DataFrame:
+def triangle_census(pairs: DataFrame,
+                    checkpoint_dir: str | None = None) -> DataFrame:
     """(n_nodes, n_edges, n_wedges, n_triangles, global_clustering) of an
-    undirected graph given as distinct (a, b) pairs with a != b."""
+    undirected graph given as distinct (a, b) pairs with a != b.
+    ``checkpoint_dir``: see ``_truncate``."""
     # materialize the edge list ONCE — the census reads it from ~6 plan
     # branches (sym x2, deg, orientation, both wedge sides, closing), and
     # without this each branch re-derives the upstream pair computation
     # (for the registered q31 graph, the whole shingle self-join)
-    pairs = pairs.localCheckpoint(eager=True)
-    if pairs.count() <= GRAPH_DRIVER_EDGES:
+    pairs, n_pairs = _truncate_counted(pairs, checkpoint_dir)
+    if n_pairs <= GRAPH_DRIVER_EDGES:
         # driver census (see GRAPH_DRIVER_EDGES): same degree
         # orientation, same integer wedge/triangle counts, same one
         # float division at the edge — bit-identical to the join plan
@@ -1595,8 +1613,7 @@ def kcore(edges: DataFrame, k: int = 2,
     (see ``_truncate``)."""
     global KCORE_LAST_ROUNDS
     KCORE_LAST_ROUNDS = 0
-    cur = _truncate(edges.select("a", "b"), checkpoint_dir)
-    n_edges = cur.count()
+    cur, n_edges = _truncate_counted(edges.select("a", "b"), checkpoint_dir)
     if n_edges <= GRAPH_DRIVER_EDGES:
         # driver peel (exact mirror of the distributed round structure,
         # incl. the fixpoint stop and KCORE_LAST_ROUNDS telemetry) — see
@@ -1638,9 +1655,10 @@ def kcore(edges: DataFrame, k: int = 2,
                .join(keep.withColumnRenamed("u", "b"), "b", "semi")
                .select("a", "b"))
         if i % 2 == 1:
-            nxt = _truncate(nxt, checkpoint_dir)
+            nxt, m = _truncate_counted(nxt, checkpoint_dir)
+        else:
+            m = nxt.count()
         KCORE_LAST_ROUNDS = i + 1
-        m = nxt.count()
         if m == n_edges:        # fixpoint: every remaining node has deg >= k
             break
         cur, n_edges = nxt, m
@@ -1742,8 +1760,8 @@ def label_propagation(pairs: DataFrame, rounds: int = LPA_ROUNDS,
     """
     from pyspark.sql.window import Window as W
 
-    edges = _truncate(pairs.select("a", "b"), checkpoint_dir)
-    if edges.count() <= GRAPH_DRIVER_EDGES:
+    edges, n_edges = _truncate_counted(pairs.select("a", "b"), checkpoint_dir)
+    if n_edges <= GRAPH_DRIVER_EDGES:
         rows = _label_propagation_driver(
             [(int(r[0]), int(r[1])) for r in edges.collect()], rounds)
         return pairs.sparkSession.createDataFrame(
@@ -2220,11 +2238,11 @@ def bfs_distances(pairs: DataFrame, max_depth: int = BFS_MAX_DEPTH,
     # the edge list (for the registered q31 graph the upstream is the
     # whole shingle self-join — recomputing it doubled r89's bench time)
     pairs = _truncate(pairs.select("doc_id_0", "doc_id_1"), checkpoint_dir)
-    edges = _truncate(
+    edges, n_edges = _truncate_counted(
         pairs.select(F.col("doc_id_0").alias("a"),
                      F.col("doc_id_1").alias("b")).distinct(),
         checkpoint_dir)
-    if edges.count() <= GRAPH_DRIVER_EDGES:
+    if n_edges <= GRAPH_DRIVER_EDGES:
         # driver BFS (exact mirror: min-node seed per component,
         # level-synchronous expansion capped at max_depth) — integer
         # histogram, bit-identical to the distributed frontier loop
@@ -2267,7 +2285,7 @@ def bfs_distances(pairs: DataFrame, max_depth: int = BFS_MAX_DEPTH,
                 hist[d] = hist.get(d, 0) + 1
         return local_frame(pairs.sparkSession, sorted(hist.items()),
                            "distance long, n_nodes long")
-    comp = neardup_components(pairs).select(
+    comp = neardup_components(pairs, checkpoint_dir=checkpoint_dir).select(
         F.col("doc_id").alias("node"), F.col("component").alias("seed"))
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b")))

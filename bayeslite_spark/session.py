@@ -12,6 +12,19 @@ Scale notes (the whole engine is designed for a ~1000-executor cluster over
 - Session timezone is pinned to UTC so timestamp semantics are deterministic
   across engines (the DuckDB correctness oracle reads the same parquet).
 - Arrow is enabled for pandas UDF exchange (vectorized model math).
+- DataFrame origin capture is off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). When it is
+  on, PySpark wraps every Column and DataFrame call in a step that
+  looks up the active session, reflects ``PySparkCurrentOrigin``, reads
+  a conf, sets and clears the origin and walks the Python stack: about
+  8 py4j round trips per call, so the builders and the BQL compiler
+  send 2-3x the commands they need, and the stack walk imports IPython
+  (when installed) into the driver. The only thing lost is the
+  "== DataFrame ==" call-site fragment of an AnalysisException. PySpark
+  reads the flag once per process, at the first wrapped call made while
+  a session is active, so it has to be in the session conf before any
+  Column or DataFrame call; ``get_spark`` is where every session here
+  is built.
 """
 
 from __future__ import annotations
@@ -51,6 +64,8 @@ def get_spark(app_name: str = "bayeslite_spark", shuffle_partitions: int | None 
         # events.parquet carries TIMESTAMP(NANOS); Spark's timestamp is
         # micros, so read nanos as int64 and convert at load (load_tables).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # no per-call origin capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # UI off by default (bench hygiene); SPARK_GRAFT_UI=1 turns it on
         # for metric-reading tools (scale_smoke's shuffle-bytes REST read)

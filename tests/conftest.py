@@ -45,3 +45,36 @@ def count_jobs(spark, fn):
     drain()
     extra = set(st.getJobIdsForGroup(None)) - untagged
     return out, len(st.getJobIdsForGroup(group)) + len(extra)
+
+
+def count_py4j(spark, fn):
+    """(fn(), Counter of the py4j commands fn sent, by target): a call's
+    target object or class (``o12``, ``z:org.apache...``), a reflection
+    lookup's or constructor's class name, else the command letter.
+    Counts commands from every thread."""
+    import threading
+    from collections import Counter
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = Counter()
+    lock = threading.Lock()
+
+    def counting(command, *args, **kwargs):
+        lines = command.split("\n")
+        if lines[0] in ("c", "i"):
+            target = lines[1]
+        elif lines[0] == "r":
+            target = lines[2]
+        else:
+            target = lines[0]
+        with lock:
+            sent[target] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+    return out, sent

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE, count_jobs
+from tests.conftest import SF_SMOKE, count_jobs, count_py4j
 
 
 def test_word_shingles_short_texts(spark):
@@ -468,9 +468,31 @@ def test_neardup_components_chain_graph_logn(spark):
     assert (agg.nc, agg.ns, agg.cnt, agg.mx) == (1, 1, n, 0)
 
 
-def test_neardup_components_driver_equals_distributed(spark):
+def _check_gate_counts(monkeypatch):
+    """Make every count the graph gates observe while materializing
+    (``dedup._truncate_counted``) assert that it equals ``count()`` on
+    the frame it came with; returns the list of observed counts."""
+    import bayeslite_spark.operators.dedup as dd
+
+    seen = []
+    observed = dd._truncate_counted
+
+    def checked(df, checkpoint_dir=None):
+        out, n = observed(df, checkpoint_dir)
+        assert n == out.count()
+        seen.append(n)
+        return out, n
+
+    monkeypatch.setattr(dd, "_truncate_counted", checked)
+    return seen
+
+
+def test_neardup_components_driver_equals_distributed(
+        spark, monkeypatch, tmp_path):
     """The bounded driver union-find fast path and the distributed star
-    contraction produce IDENTICAL (doc, component, survivor) rows."""
+    contraction produce IDENTICAL (doc, component, survivor) rows, with
+    localCheckpoint and with reliable checkpoints, and the edge counts
+    observed while materializing equal ``count()``."""
     import random
 
     from bayeslite_spark.operators.dedup import neardup_components
@@ -480,10 +502,16 @@ def test_neardup_components_driver_equals_distributed(spark):
              for _ in range(180)}
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "doc_id_0 long, doc_id_1 long")
-    fast = {tuple(r) for r in neardup_components(pairs).collect()}
-    dist = {tuple(r) for r in
-            neardup_components(pairs, driver_threshold=0).collect()}
-    assert fast == dist and fast
+    seen = _check_gate_counts(monkeypatch)
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        fast = {tuple(r) for r in
+                neardup_components(pairs, checkpoint_dir=ckpt).collect()}
+        dist = {tuple(r) for r in neardup_components(
+            pairs, driver_threshold=0, checkpoint_dir=ckpt).collect()}
+        assert fast == dist and fast
+    # the gate and every star round, in both modes
+    undirected = {(max(a, b), min(a, b)) for a, b in edges}
+    assert len(seen) > 4 and len(undirected) in seen
 
 
 def test_neardup_components_consistent_with_pairs(spark):
@@ -2941,12 +2969,15 @@ def test_source_divergence_math(spark):
     assert all(r.kl_nats >= 0 for r in real.collect())
 
 
-def test_graph_driver_and_distributed_paths_agree(spark):
+def test_graph_driver_and_distributed_paths_agree(
+        spark, monkeypatch, tmp_path):
     """The round-9 hybrid gate (GRAPH_DRIVER_EDGES): every graph
     operator's driver fast-path must produce EXACTLY the rows of its
     distributed loop on the same graph — forced by flipping the gate,
     on a graph with a triangle, a chain, a 4-clique and an isolated
-    edge (mixed component shapes, ties in degree and label votes)."""
+    edge (mixed component shapes, ties in degree and label votes) —
+    with localCheckpoint and with reliable checkpoints; every count
+    observed while materializing equals ``count()``."""
     import bayeslite_spark.operators.dedup as dd
 
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5),
@@ -2955,66 +2986,77 @@ def test_graph_driver_and_distributed_paths_agree(spark):
     df = spark.createDataFrame(edges, "a long, b long")
     pair_df = spark.createDataFrame(
         edges, "doc_id_0 long, doc_id_1 long")
-    runs = {
-        "pagerank": lambda: sorted(
-            (r.node, round(r.rank, 12))
-            for r in dd.pagerank(df).collect()),
-        "kcore": lambda: sorted(
-            map(tuple, dd.kcore(df, k=2).collect())),
-        "lpa": lambda: sorted(
-            map(tuple, dd.label_propagation(df).collect())),
-        "triangles": lambda: sorted(
-            map(tuple, dd.triangle_census(df).collect())),
-        "bfs": lambda: sorted(
-            map(tuple, dd.bfs_distances(pair_df).collect())),
-    }
+
+    def runs(ckpt):
+        return {
+            "pagerank": lambda: sorted(
+                (r.node, round(r.rank, 12))
+                for r in dd.pagerank(df, checkpoint_dir=ckpt).collect()),
+            "kcore": lambda: sorted(map(tuple, dd.kcore(
+                df, k=2, checkpoint_dir=ckpt).collect())),
+            "lpa": lambda: sorted(map(tuple, dd.label_propagation(
+                df, checkpoint_dir=ckpt).collect())),
+            "triangles": lambda: sorted(map(tuple, dd.triangle_census(
+                df, checkpoint_dir=ckpt).collect())),
+            "bfs": lambda: sorted(map(tuple, dd.bfs_distances(
+                pair_df, checkpoint_dir=ckpt).collect())),
+        }
+
+    seen = _check_gate_counts(monkeypatch)
     saved = dd.GRAPH_DRIVER_EDGES
     try:
-        dd.GRAPH_DRIVER_EDGES = 10**9
-        driver = {k: f() for k, f in runs.items()}
-        dd.GRAPH_DRIVER_EDGES = -1
-        dist = {k: f() for k, f in runs.items()}
+        for ckpt in (None, str(tmp_path / "ckpt")):
+            dd.GRAPH_DRIVER_EDGES = 10**9
+            driver = {k: f() for k, f in runs(ckpt).items()}
+            dd.GRAPH_DRIVER_EDGES = -1
+            dist = {k: f() for k, f in runs(ckpt).items()}
+            for k in driver:
+                assert driver[k] == dist[k], (k, ckpt)
     finally:
         dd.GRAPH_DRIVER_EDGES = saved
-    for k in runs:
-        assert driver[k] == dist[k], k
+    assert len(edges) in seen
 
 
-def test_graph_gates_agree_on_empty_results(spark):
+def test_graph_gates_agree_on_empty_results(spark, monkeypatch, tmp_path):
     """Both sides of all six graph gates give the same types and rows
     when the result is empty or degenerate: the empty graph for every
-    gate, and a tree, whose 2-core peels away entirely."""
+    gate, and a tree, whose 2-core peels away entirely — with
+    localCheckpoint and with reliable checkpoints, the counts observed
+    while materializing equal to ``count()`` (0 on the empty graph)."""
     import bayeslite_spark.operators.dedup as dd
 
     def graph(edges):
         return (spark.createDataFrame(edges, "a long, b long"),
                 spark.createDataFrame(edges, "doc_id_0 long, doc_id_1 long"))
 
-    def runs(edges, threshold):
+    def runs(edges, threshold, ckpt):
         df, pair_df = graph(edges)
         outs = {
             "components": dd.neardup_components(
-                pair_df, driver_threshold=threshold),
-            "pagerank": dd.pagerank(df),
-            "kcore": dd.kcore(df, k=2),
-            "lpa": dd.label_propagation(df),
-            "triangles": dd.triangle_census(df),
-            "bfs": dd.bfs_distances(pair_df),
+                pair_df, driver_threshold=threshold, checkpoint_dir=ckpt),
+            "pagerank": dd.pagerank(df, checkpoint_dir=ckpt),
+            "kcore": dd.kcore(df, k=2, checkpoint_dir=ckpt),
+            "lpa": dd.label_propagation(df, checkpoint_dir=ckpt),
+            "triangles": dd.triangle_census(df, checkpoint_dir=ckpt),
+            "bfs": dd.bfs_distances(pair_df, checkpoint_dir=ckpt),
         }
         return {k: (o.dtypes, sorted(map(tuple, o.collect())))
                 for k, o in outs.items()}
 
+    seen = _check_gate_counts(monkeypatch)
     saved = dd.GRAPH_DRIVER_EDGES
     try:
-        for edges in ([], [(1, 2), (2, 3), (3, 4), (2, 5)]):
-            dd.GRAPH_DRIVER_EDGES = 10**9
-            driver = runs(edges, 10**9)
-            dd.GRAPH_DRIVER_EDGES = -1
-            dist = runs(edges, -1)
-            assert driver == dist, edges
-            assert driver["kcore"][1] == []
+        for ckpt in (None, str(tmp_path / "ckpt")):
+            for edges in ([], [(1, 2), (2, 3), (3, 4), (2, 5)]):
+                dd.GRAPH_DRIVER_EDGES = 10**9
+                driver = runs(edges, 10**9, ckpt)
+                dd.GRAPH_DRIVER_EDGES = -1
+                dist = runs(edges, -1, ckpt)
+                assert driver == dist, (edges, ckpt)
+                assert driver["kcore"][1] == []
     finally:
         dd.GRAPH_DRIVER_EDGES = saved
+    assert 0 in seen and 4 in seen
 
 
 def test_kcore_matches_python_peel(spark):
@@ -3981,6 +4023,30 @@ def test_rank_and_graph_gate_plans_run_no_python_worker(spark):
     assert rows and jobs == 0
 
 
+def test_q71_and_r71_job_budgets(spark):
+    """q71's size gate reads its edge count from the job that
+    materializes the edges (9 build jobs, not 11), and Spearman takes
+    its tie averages from the one stacked range rank (13 jobs in all,
+    not 17); neither build sends a call-site (origin) py4j command."""
+    from bayeslite_spark.workload import get_queries
+
+    qs = get_queries()
+    for name in ("q71_neardup_components", "r71_spearman"):
+        qs[name](spark, SF_SMOKE).collect()   # warm the table caches
+
+    def build(name):
+        (df, jobs), sent = count_py4j(spark, lambda: count_jobs(
+            spark, lambda: qs[name](spark, SF_SMOKE)))
+        assert not [t for t in sent if "PySparkCurrentOrigin" in t], name
+        return df, jobs
+
+    q71, built = build("q71_neardup_components")
+    assert q71.collect() and built <= 9
+    r71, built = build("r71_spearman")
+    rows, ran = count_jobs(spark, r71.collect)
+    assert rows and built + ran <= 13, (built, ran)
+
+
 def test_spearman_monotone_and_reference(spark):
     import numpy as np
 
@@ -4013,6 +4079,15 @@ def test_spearman_monotone_and_reference(spark):
     rx, ry = avg_ranks(x), avg_ranks(y)
     ref = np.corrcoef(rx, ry)[0, 1]
     assert abs(got - round(ref, 6)) < 2e-6
+    # heavy ties: x constant except for two values, one on each side
+    x3 = np.full(300, 5)
+    x3[17], x3[250] = 1, 9
+    df3 = spark.createDataFrame(
+        [(i, int(a), int(b)) for i, (a, b) in enumerate(zip(x3, y))],
+        "k long, x long, y long")
+    r3 = spearman(df3, "x", "y", "k").collect()[0]
+    ref3 = np.corrcoef(avg_ranks(x3), ry)[0, 1]
+    assert r3.n == 300 and abs(r3.rho - round(ref3, 6)) < 2e-6
 
 
 def test_asof_family_tie_and_tolerance_semantics(spark, tmp_path):
