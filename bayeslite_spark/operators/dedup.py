@@ -698,8 +698,7 @@ def _components_driver(spark, edge_rows) -> DataFrame:
 
 
 def neardup_components(pairs: DataFrame, max_iter: int = 25,
-                       driver_threshold: int = 200_000,
-                       checkpoint_dir: str | None = None) -> DataFrame:
+                       driver_threshold: int = 200_000) -> DataFrame:
     """(doc_id, component, is_survivor) for every doc in the pair graph.
 
     ``component`` is the min doc_id of the connected component;
@@ -713,8 +712,7 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     large-star/small-star contraction, which converges in O(log n)
     rounds even on adversarial chain graphs; raises if the edge set has
     not reached the star fixpoint within ``max_iter`` rounds. Both paths
-    produce identical output (equality-tested). ``checkpoint_dir``: see
-    ``_truncate``."""
+    produce identical output (equality-tested)."""
     nodes = (
         pairs.select(F.col("doc_id_0").alias("doc_id"))
         .union(pairs.select("doc_id_1"))
@@ -722,21 +720,21 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     )
     # Each round references the previous edge set ~4× (symmetrize +
     # join + union), so without lineage truncation the logical plan
-    # grows 4^rounds and Catalyst analysis OOMs. _truncate materializes
-    # each round and cuts the plan flat, and the edge counts come from
-    # the same jobs.
+    # grows 4^rounds and Catalyst analysis OOMs. localCheckpoint
+    # materializes each round and cuts the plan flat (and its job
+    # observes the edge count) — on a real cluster swap for reliable
+    # `checkpoint()` to HDFS for fault tolerance; the per-round job
+    # shape is identical.
     edges, n_edges = _truncate_counted(
         pairs.select(
             F.greatest("doc_id_0", "doc_id_1").alias("u"),
             F.least("doc_id_0", "doc_id_1").alias("v"),
-        ).distinct(),
-        checkpoint_dir,
+        ).distinct()
     )
     if n_edges <= driver_threshold:
         return _components_driver(pairs.sparkSession, edges.collect())
     for _ in range(max_iter):
-        new, n_new = _truncate_counted(
-            _small_star(_large_star(edges)), checkpoint_dir)
+        new, n_new = _truncate_counted(_small_star(_large_star(edges)))
         # Fixpoint: the edge set is stable (same size, nothing new) —
         # a union of stars centred on each component's global min.
         changed = 1 if n_new != n_edges else new.subtract(edges).count()
@@ -1235,15 +1233,7 @@ def _truncate(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     differs."""
     if checkpoint_dir is not None:
         sc = df.sparkSession.sparkContext
-        # the directory is per context, and Spark checkpoints into a
-        # fresh subdirectory of the one set: set it unless it is this
-        # call's directory already
-        path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-        want = path.getFileSystem(sc._jsc.hadoopConfiguration()) \
-            .makeQualified(path).toString()
-        cur = sc._jsc.sc().getCheckpointDir()
-        if cur.isEmpty() or sc._jvm.org.apache.hadoop.fs.Path(
-                cur.get()).getParent().toString() != want:
+        if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
@@ -1500,16 +1490,14 @@ FROM wn CROSS JOIN ec CROSS JOIN tri
 """
 
 
-def triangle_census(pairs: DataFrame,
-                    checkpoint_dir: str | None = None) -> DataFrame:
+def triangle_census(pairs: DataFrame) -> DataFrame:
     """(n_nodes, n_edges, n_wedges, n_triangles, global_clustering) of an
-    undirected graph given as distinct (a, b) pairs with a != b.
-    ``checkpoint_dir``: see ``_truncate``."""
+    undirected graph given as distinct (a, b) pairs with a != b."""
     # materialize the edge list ONCE — the census reads it from ~6 plan
     # branches (sym x2, deg, orientation, both wedge sides, closing), and
     # without this each branch re-derives the upstream pair computation
     # (for the registered q31 graph, the whole shingle self-join)
-    pairs, n_pairs = _truncate_counted(pairs, checkpoint_dir)
+    pairs, n_pairs = _truncate_counted(pairs)
     if n_pairs <= GRAPH_DRIVER_EDGES:
         # driver census (see GRAPH_DRIVER_EDGES): same degree
         # orientation, same integer wedge/triangle counts, same one
@@ -2285,7 +2273,7 @@ def bfs_distances(pairs: DataFrame, max_depth: int = BFS_MAX_DEPTH,
                 hist[d] = hist.get(d, 0) + 1
         return local_frame(pairs.sparkSession, sorted(hist.items()),
                            "distance long, n_nodes long")
-    comp = neardup_components(pairs, checkpoint_dir=checkpoint_dir).select(
+    comp = neardup_components(pairs).select(
         F.col("doc_id").alias("node"), F.col("component").alias("seed"))
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b")))

@@ -25,6 +25,13 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def checkpoint_dir(tmp_path_factory):
+    """The reliable-checkpoint directory every test shares: a context
+    keeps the first directory set on it (``dedup._truncate``)."""
+    return str(tmp_path_factory.mktemp("ckpt"))
+
+
 def count_jobs(spark, fn):
     """(fn(), Spark jobs fn launched), counting jobs from other threads
     (no job group) as well as the caller's."""
