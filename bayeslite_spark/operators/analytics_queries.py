@@ -1900,10 +1900,10 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
     appended to every spec as the final tie-break, so specs only list
     the value keys.  All spec lists must share the same arity.
 
-    Mechanism: stack ``len(specs)`` narrow copies of (block id, sort
-    keys, key) — the §8 lightweight-proxy move — range-partition ONCE on
-    (block, keys..., key), number the rows with the distributed_rank
-    offset expression (``_range_rank``: no Python worker), subtract
+    Mechanism: one projection emits ``len(specs)`` narrow rows of
+    (block id, sort keys, key) per input row — the §8 lightweight-proxy
+    move — range-partition ONCE on (block, keys..., key), number the
+    rows with the distributed_rank offset expression (``_range_rank``: no Python worker), subtract
     ``block * N`` to recover each block's 1-based rank, and pivot the
     blocks back to columns with one hash aggregate on the key.
     ``carry`` columns ride block 0 (null elsewhere) so payload needed
@@ -1927,8 +1927,9 @@ def _rank_stacked(df: DataFrame, key_col: str, specs: "dict[str, list]",
     """``(ranked, n_rows)``: the blocks of ``distributed_multi_rank``
     stacked and ranked with one ``_range_rank``.  Block ``i`` holds spec
     ``i``'s rows as ``(_blk, _k0.._k{arity-1}, key_col, *carry)``, the
-    keys cast to long and ``carry`` non-null in block 0 only; ``_r`` is
-    the rank under ``(_blk, keys..., key_col)``, so block ``i``'s own
+    keys cast to long and ``carry`` non-null in block 0 only; one
+    ``inline`` projection emits every block, so ``df`` runs once.  ``_r``
+    is the rank under ``(_blk, keys..., key_col)``, so block ``i``'s own
     1-based rank is ``_r - i * n_rows``."""
     from pyspark.sql.types import IntegralType
 
@@ -1944,24 +1945,21 @@ def _rank_stacked(df: DataFrame, key_col: str, specs: "dict[str, list]",
         raise TypeError("distributed_multi_rank: sort keys must be integral, "
                         f"got {', '.join(bad)}")
 
-    stacked = None
-    for i, cols in enumerate(specs.values()):
-        if len(cols) != arity:
-            raise ValueError("distributed_multi_rank: uneven spec arity")
-        sel = [F.lit(i).alias("_blk")]
-        sel += [c.cast("long").alias(f"_k{j}") for j, c in enumerate(cols)]
-        sel.append(F.col(key_col))
-        for c in carry:
-            sel.append((F.col(c) if i == 0
-                        else F.lit(None).cast(carry_types[c])).alias(c))
-        part = df.select(*sel)
-        stacked = part if stacked is None else stacked.unionByName(part)
+    if any(len(cols) != arity for cols in specs.values()):
+        raise ValueError("distributed_multi_rank: uneven spec arity")
+    blocks = [
+        F.struct(F.lit(i).alias("_blk"),
+                 *[c.cast("long").alias(f"_k{j}") for j, c in enumerate(cols)],
+                 F.col(key_col),
+                 *[(F.col(c) if i == 0
+                    else F.lit(None).cast(carry_types[c])).alias(c)
+                   for c in carry])
+        for i, cols in enumerate(specs.values())]
+    stacked = df.select(F.inline(F.array(*blocks)))
     order_exprs = ([F.col("_blk")]
                    + [F.col(f"_k{j}") for j in range(arity)]
                    + [F.col(key_col)])
     ranked, total = _range_rank(stacked, order_exprs, "_r")
-    if total % len(specs):
-        raise AssertionError("distributed_multi_rank: ragged blocks")
     return ranked, total // len(specs)
 
 
@@ -1990,8 +1988,8 @@ def ntile_of_rank(rank_col: str, n: int, n_rows: int):
 # per-customer order count vs total spend.
 #
 # Scale: both orders are ranked by one stacked range rank (never a
-# global-order window); tie-group average ranks come from ONE
-# groupBy(block, value) over the ranked blocks ((first+last)/2 of a
+# global-order window); tie-group average ranks come from ONE aggregate
+# on (block, value) that both rank lookups reuse ((first+last)/2 of a
 # contiguous run = min + (cnt-1)/2); the correlation is a 1-row
 # aggregate of exact sums.
 # ---------------------------------------------------------------------------
@@ -2026,26 +2024,28 @@ def spearman(df: DataFrame, x_col: str, y_col: str,
 
     ``x`` and ``y`` are ranked as two stacked blocks with one range
     shuffle (``_rank_stacked``).  Ranks of equal values are contiguous
-    under the key tie-break, so ONE ``groupBy(block, value)`` over the
-    ranked blocks gives each value's average rank, ``first + (cnt-1)/2``;
-    block 0, which carries ``y``, joins both tie tables into the final
+    under the key tie-break, so ONE aggregate on ``(block, value)``
+    gives each value's average rank, ``first + (cnt-1)/2``; block 0,
+    which carries ``y``, looks up both its ranks there for the final
     1-row aggregate of exact sums.  Values must be integral, as for
     ``distributed_multi_rank``."""
     ranked, n_rows = _rank_stacked(
         df.select(key_col, x_col, y_col), key_col,
         {"x": [F.col(x_col)], "y": [F.col(y_col)]}, carry=[y_col])
-    blk = F.col("_blk").cast("long")
-    ties = ranked.groupBy("_blk", "_k0").agg(
-        (F.min("_r") - blk * n_rows
+    # A struct key, because Catalyst pushes a filter on a grouping
+    # column below the aggregate (one aggregate per block).  Left joins
+    # (every block-0 value has its tie row) build on the tie table only,
+    # so both lookups share one aggregate and one build side.
+    ties = ranked.groupBy(F.struct("_blk", "_k0").alias("_bk")).agg(
+        (F.min(F.col("_r") - F.col("_blk").cast("long") * n_rows)
          + (F.count(F.lit(1)) - 1) / 2.0).alias("_avg"))
-    rx = ties.where(F.col("_blk") == 0).select(
-        F.col("_k0").alias("_x"), F.col("_avg").alias("rx"))
-    ry = ties.where(F.col("_blk") == 1).select(
-        F.col("_k0").alias("_y"), F.col("_avg").alias("ry"))
     b = (ranked.where(F.col("_blk") == 0)
          .select(F.col("_k0").alias("_x"),
-                 F.col(y_col).cast("long").alias("_y"))
-         .join(rx, "_x").join(ry, "_y"))
+                 F.col(y_col).cast("long").alias("_y")))
+    for i, v, out in ((0, "_x", "rx"), (1, "_y", "ry")):
+        key = F.struct(F.lit(i).alias("_blk"), F.col(v).alias("_k0"))
+        b = b.join(ties, key == ties["_bk"], "left").select(
+            *b.columns, F.col("_avg").alias(out))
     n = F.count(F.lit(1))
     num = n * F.sum(F.col("rx") * F.col("ry")) - F.sum("rx") * F.sum("ry")
     den = F.sqrt(

@@ -144,8 +144,6 @@ def candidate_jaccard(docs: DataFrame) -> DataFrame:
     """(doc_id_0, doc_id_1, intersection, n0, n1, jac): ALL candidate
     pairs sharing >= 1 sub-cap shingle, with the un-thresholded Jaccard
     — q31 filters this at 0.5; r66 histograms it for threshold tuning."""
-    # cache: the inverted index feeds both sides of the self-join and the
-    # per-doc set sizes; without it the shingle extraction runs 3x
     base = hashed_shingle_table(docs).cache()  # feeds freq AND the index
     # Stop-shingle hygiene: a shingle present in > MAX_SHINGLE_DF docs
     # contributes O(df^2) candidate pairs while carrying ~no Jaccard
@@ -154,29 +152,23 @@ def candidate_jaccard(docs: DataFrame) -> DataFrame:
     # cap. This is the guard that prevents hot-key blowup at 100 TB.
     freq = base.groupBy("shash").agg(F.count(F.lit(1)).alias("df"))
     hot = freq.filter(F.col("df") > MAX_SHINGLE_DF).select("shash")
-    sh = base.join(F.broadcast(hot), "shash", "left_anti").cache()
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shash") == F.col("b.shash")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_id_0"), F.col("b.doc_id").alias("doc_id_1"))
-        .agg(F.count(F.lit(1)).alias("intersection"))
-    )
-    ca = cnt.select(F.col("doc_id").alias("doc_id_0"), F.col("n").alias("n0"))
-    cb = cnt.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1"))
+    # The index (cached: both sides of the self-join read it) carries
+    # each doc's sub-cap set size n through the token join, so the pair
+    # aggregate needs no join back to a size table; the window's
+    # partition is one doc's shingles (no skew).
+    sh = (base.join(F.broadcast(hot), "shash", "left_anti")
+          .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+          .cache())
+    a, b = sh.alias("a"), sh.alias("b")
     jac = F.col("intersection") / (F.col("n0") + F.col("n1") - F.col("intersection"))
-    # No broadcast hint on ca/cb: `cnt` has one row per document, so at
-    # corpus scale it is a multi-GB table and a forced broadcast would OOM
-    # the driver. AQE broadcasts it anyway when it is actually small.
-    # (round-9 note: caching THIS scored-candidate output was tried and
-    # reverted — materializing the unfiltered candidate table cost more
-    # than consumers saved, and warm passes got slower under the cache
-    # churn; the index-level caches above are the right granularity.)
+    # Not cached: materializing the unfiltered scored candidates cost
+    # more than consumers saved (cache churn slowed warm passes).
     return (
-        pairs.join(ca, "doc_id_0")
-        .join(cb, "doc_id_1")
-        .withColumn("jac", jac)
+        a.join(b, (F.col("a.shash") == F.col("b.shash")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_id_0"), F.col("b.doc_id").alias("doc_id_1"),
+                 F.col("a.n").alias("n0"), F.col("b.n").alias("n1"))
+        .agg(F.count(F.lit(1)).alias("intersection"))
+        .select("doc_id_0", "doc_id_1", "intersection", "n0", "n1", jac.alias("jac"))
     )
 
 
@@ -704,8 +696,11 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     ``component`` is the min doc_id of the connected component;
     ``is_survivor`` marks the one doc per cluster a dedup pass keeps.
 
-    Hybrid execution, AQE-style: once the deduplicated edge count is
-    known, graphs at or under ``driver_threshold`` edges (a few MB)
+    ``pairs`` may hold duplicate, reversed and self pairs: union-find
+    ignores them, and the first star round's ``distinct()`` drops them.
+
+    Hybrid execution, AQE-style: once the oriented pair-row count is
+    known, graphs at or under ``driver_threshold`` rows (a few MB)
     union-find on the driver in one pass — near-dup GRAPHS are tiny
     relative to the corpus, and a dozen Spark jobs of fixed overhead
     would dominate. Larger graphs run the distributed alternating
@@ -724,12 +719,13 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     # materializes each round and cuts the plan flat (and its job
     # observes the edge count) — on a real cluster swap for reliable
     # `checkpoint()` to HDFS for fault tolerance; the per-round job
-    # shape is identical.
+    # shape is identical.  No distinct(): a higher count at worst sends
+    # a graph to the distributed path, whose fixpoint test is set-based.
     edges, n_edges = _truncate_counted(
         pairs.select(
             F.greatest("doc_id_0", "doc_id_1").alias("u"),
             F.least("doc_id_0", "doc_id_1").alias("v"),
-        ).distinct()
+        )
     )
     if n_edges <= driver_threshold:
         return _components_driver(pairs.sparkSession, edges.collect())

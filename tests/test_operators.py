@@ -505,9 +505,94 @@ def test_neardup_components_driver_equals_distributed(spark, monkeypatch):
     dist = {tuple(r) for r in
             neardup_components(pairs, driver_threshold=0).collect()}
     assert fast == dist and fast
-    # the gate on both paths, and every star round
-    undirected = {(max(a, b), min(a, b)) for a, b in edges}
-    assert len(seen) > 2 and seen[:2] == [len(undirected)] * 2
+    # the gate on both paths (it counts the oriented pair rows), and
+    # every star round
+    assert len(seen) > 2 and seen[:2] == [len(edges)] * 2
+
+
+def _jaccard_reference(docs):
+    """candidate_jaccard's pairs by the per-doc size table joined back
+    to both sides of the pair aggregate (the formula it replaced)."""
+    import bayeslite_spark.operators.dedup as dd
+
+    base = dd.hashed_shingle_table(docs)
+    freq = base.groupBy("shash").agg(F.count(F.lit(1)).alias("df"))
+    hot = freq.filter(F.col("df") > dd.MAX_SHINGLE_DF).select("shash")
+    sh = base.join(hot, "shash", "left_anti")
+    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.shash") == F.col("b.shash"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_id_0"),
+                 F.col("b.doc_id").alias("doc_id_1"))
+        .agg(F.count(F.lit(1)).alias("intersection")))
+    ca = cnt.select(F.col("doc_id").alias("doc_id_0"), F.col("n").alias("n0"))
+    cb = cnt.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1"))
+    jac = F.col("intersection") / (F.col("n0") + F.col("n1")
+                                   - F.col("intersection"))
+    return (pairs.join(ca, "doc_id_0").join(cb, "doc_id_1")
+            .select("doc_id_0", "doc_id_1", "intersection", "n0", "n1",
+                    jac.alias("jac")))
+
+
+def test_candidate_jaccard_matches_size_join_reference(spark, monkeypatch):
+    """Set sizes carried on the index give the same pairs, intersections,
+    sizes and Jaccard as joining a per-doc size table back, with a hot
+    shingle over the cap and documents too short to shingle."""
+    import bayeslite_spark.operators.dedup as dd
+
+    boiler = "click here to subscribe now"
+    texts = [
+        boiler + " the quick brown fox jumps over",
+        boiler + " the quick brown fox leaps over",
+        boiler + " a slow green turtle walks home",
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy cat",
+        "a slow green turtle walks home today",
+        boiler,
+        "two words",
+        "one",
+        "",
+        "entirely unrelated text with no overlap at all",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    for cap in (dd.MAX_SHINGLE_DF, 3):
+        monkeypatch.setattr(dd, "MAX_SHINGLE_DF", cap)
+        got = {tuple(r) for r in dd.candidate_jaccard(docs).select(
+            "doc_id_0", "doc_id_1", "intersection", "n0", "n1",
+            "jac").collect()}
+        want = {tuple(r) for r in _jaccard_reference(docs).collect()}
+        assert got == want and got, cap
+        short = {7, 8, 9}
+        assert not {d for r in got for d in r[:2]} & short
+    # under the cap of 3 the boilerplate shingles are dropped from doc 6
+    # and from the sizes of docs 0-2, so doc 6 pairs with nobody
+    assert not {r for r in got if 6 in r[:2]}
+
+
+def test_neardup_components_ignore_duplicate_reversed_self_pairs(spark):
+    """Duplicate, reversed and self pairs change neither path's
+    components: both gate sides equal the clean graph's driver result."""
+    import random
+
+    from bayeslite_spark.operators.dedup import neardup_components
+
+    rnd = random.Random(29)
+    clean = sorted({(a, b) for a, b in
+                    ((rnd.randrange(0, 120), rnd.randrange(0, 120))
+                     for _ in range(90)) if a < b})
+    dirty = (clean + clean[::3] + [(b, a) for a, b in clean[::2]]
+             + [(a, a) for a, _ in clean[::5]] + [(500, 500)])
+    schema = "doc_id_0 long, doc_id_1 long"
+    want = {tuple(r) for r in neardup_components(
+        spark.createDataFrame(clean, schema)).collect()} | {(500, 500, 1)}
+    pairs = spark.createDataFrame(dirty, schema)
+    for threshold in (200_000, 0):
+        got = {tuple(r) for r in neardup_components(
+            pairs, driver_threshold=threshold).collect()}
+        assert got == want, threshold
 
 
 def test_neardup_components_consistent_with_pairs(spark):
@@ -3986,24 +4071,28 @@ def test_distributed_rank_partition_shapes(spark):
 
 def test_multi_rank_with_carry_equals_window_ranks(spark):
     """Two orders ranked with one shuffle, carry payload riding block 0:
-    each rank equals its own row_number() window, and the carry column
-    and the row count come back intact."""
+    each rank equals its own row_number() window (a NULL sort key ranks
+    first, as in the window), and both carry columns and the row count
+    come back intact."""
     import numpy as np
 
     from bayeslite_spark.operators.analytics_queries import distributed_multi_rank
 
     rng = np.random.default_rng(17)
-    rows = [(i, int(a), int(b), f"p{i}") for i, (a, b) in
-            enumerate(rng.integers(-30, 30, (3_000, 2)))]
-    df = spark.createDataFrame(rows, "id long, a long, b int, pay string")
+    rows = [(i, None if i % 7 == 3 else int(a), int(b), f"p{i}", i / 4)
+            for i, (a, b) in enumerate(rng.integers(-30, 30, (3_000, 2)))]
+    df = spark.createDataFrame(
+        rows, "id long, a long, b int, pay string, w double")
     ranked, n = distributed_multi_rank(
         df.repartition(9), "id",
-        {"ra": [F.col("a")], "rb": [-F.col("b")]}, carry=["pay"])
-    got = {r.id: (r.ra, r.rb, r.pay) for r in ranked.collect()}
+        {"ra": [F.col("a")], "rb": [-F.col("b")]}, carry=["pay", "w"])
+    got = {r.id: (r.ra, r.rb, r.pay, r.w) for r in ranked.collect()}
     ra = _row_number(df, "a", "id")
     rb = _row_number(df, F.col("b").desc(), "id")
     assert n == len(rows)
-    assert got == {i: (ra[i], rb[i], f"p{i}") for i in range(len(rows))}
+    assert min(ra[i] for i in range(3, len(rows), 7)) == 1
+    assert got == {i: (ra[i], rb[i], f"p{i}", i / 4)
+                   for i in range(len(rows))}
 
 
 def test_rank_and_graph_gate_plans_run_no_python_worker(spark):
@@ -4025,11 +4114,15 @@ def test_rank_and_graph_gate_plans_run_no_python_worker(spark):
     assert rows and jobs == 0
 
 
-def test_q71_and_r71_job_budgets(spark):
+def test_q71_and_r71_job_budgets(spark, monkeypatch):
     """q71's size gate reads its edge count from the job that
-    materializes the edges (9 build jobs, not 11), and Spearman takes
-    its tie averages from the one stacked range rank (13 jobs in all,
-    not 17); neither build sends a call-site (origin) py4j command."""
+    materializes the edges, and the Jaccard index carries its set sizes
+    (3 build jobs, not 9); Spearman stacks both rank blocks from one
+    projection of the per-customer aggregate (one ``orders`` scan in the
+    checkpointed rank plan) and takes both tie lookups from one
+    aggregate (10 jobs in all, not 13); neither build sends a call-site
+    (origin) py4j command."""
+    import bayeslite_spark.operators.analytics_queries as aq
     from bayeslite_spark.workload import get_queries
 
     qs = get_queries()
@@ -4043,10 +4136,20 @@ def test_q71_and_r71_job_budgets(spark):
         return df, jobs
 
     q71, built = build("q71_neardup_components")
-    assert q71.collect() and built <= 9
+    assert q71.collect() and built <= 3, built
+    ranked = []
+    range_rank = aq._range_rank
+
+    def recorded(df, *args):
+        ranked.append(df)
+        return range_rank(df, *args)
+
+    monkeypatch.setattr(aq, "_range_rank", recorded)
     r71, built = build("r71_spearman")
     rows, ran = count_jobs(spark, r71.collect)
-    assert rows and built + ran <= 13, (built, ran)
+    assert rows and built + ran <= 10, (built, ran)
+    plan = ranked[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert len(ranked) == 1 and plan.count("Relation [o_orderkey") == 1
 
 
 def test_spearman_monotone_and_reference(spark):
