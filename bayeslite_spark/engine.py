@@ -2180,8 +2180,6 @@ class SparkBQL:
         if ast.order_by:
             ast.order_by = self._strip_v_alias(ast.order_by)
         universe = self._column_universe(ast, pop)
-        base = local_frame(
-            self.spark, universe, "name string, stattype string, colno int")
         # estimators nest in WHERE here just as in row context (the
         # reference compiles them as ordinary scalar functions in any
         # expression position): split the clause into a SQL template +
@@ -2279,7 +2277,8 @@ class SparkBQL:
                     out_rows[ri][cn] = None if val is None else float(val)
             out = self.spark.createDataFrame(pd.DataFrame(out_rows))
         else:
-            out = base
+            out = local_frame(
+                self.spark, universe, "name string, stattype string, colno int")
             tmp_cols: list[str] = []
             for i, item in enumerate(ast.items):
                 name = self._item_name(item, i)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bayeslite_spark.session import local_frame
-from bayeslite_spark.workload import _t, fan_out, register
+from bayeslite_spark.workload import _session_plan, _t, fan_out, register
 
 _Q30_ORACLE = """
 SELECT md5(text) AS content_hash,
@@ -143,7 +143,14 @@ WHERE intersection * 1.0 / (ca.n + cb.n - intersection) >= 0.5
 def candidate_jaccard(docs: DataFrame) -> DataFrame:
     """(doc_id_0, doc_id_1, intersection, n0, n1, jac): ALL candidate
     pairs sharing >= 1 sub-cap shingle, with the un-thresholded Jaccard
-    — q31 filters this at 0.5; r66 histograms it for threshold tuning."""
+    — q31 filters this at 0.5; r66 histograms it for threshold tuning.
+
+    Queries over a data dir's ``documents`` take this plan from
+    :func:`candidate_pairs`, built once per session. That is safe only
+    because every caller transforms it further: no registered entry
+    returns it as it is, since a second collect of one DataFrame object
+    would reuse the first collect's shuffle output
+    (``workload._session_plan``)."""
     base = hashed_shingle_table(docs).cache()  # feeds freq AND the index
     # Stop-shingle hygiene: a shingle present in > MAX_SHINGLE_DF docs
     # contributes O(df^2) candidate pairs while carrying ~no Jaccard
@@ -172,14 +179,21 @@ def candidate_jaccard(docs: DataFrame) -> DataFrame:
     )
 
 
+def candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``candidate_jaccard`` over ``sf_dir``'s documents, its plan built
+    once per session (``workload._session_plan``). Callers must derive a
+    new DataFrame from it, never return it as it is."""
+    return _session_plan(spark, sf_dir, "documents:candidate_jaccard",
+                         lambda: candidate_jaccard(_t(spark, sf_dir, "documents")))
+
+
 @register("q31_ngram_jaccard", _Q31_ORACLE, tags=("dedup",))
 def q31_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact 3-word-shingle Jaccard >= 0.5 via
     inverted-index self-join (no cross join; candidate generation and
     intersection counting are one shuffle keyed on the shingle)."""
-    docs = _t(spark, sf_dir, "documents")
     return (
-        candidate_jaccard(docs)
+        candidate_pairs(spark, sf_dir)
         .filter(F.col("jac") >= 0.5)
         .select("doc_id_0", "doc_id_1", F.round("jac", 6).alias("jaccard"))
     )
@@ -708,11 +722,6 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
     rounds even on adversarial chain graphs; raises if the edge set has
     not reached the star fixpoint within ``max_iter`` rounds. Both paths
     produce identical output (equality-tested)."""
-    nodes = (
-        pairs.select(F.col("doc_id_0").alias("doc_id"))
-        .union(pairs.select("doc_id_1"))
-        .distinct()
-    )
     # Each round references the previous edge set ~4× (symmetrize +
     # join + union), so without lineage truncation the logical plan
     # grows 4^rounds and Catalyst analysis OOMs. localCheckpoint
@@ -741,6 +750,12 @@ def neardup_components(pairs: DataFrame, max_iter: int = 25,
         raise RuntimeError(
             f"star contraction did not converge in {max_iter} rounds"
         )
+    # only this distributed path reads the node list
+    nodes = (
+        pairs.select(F.col("doc_id_0").alias("doc_id"))
+        .union(pairs.select("doc_id_1"))
+        .distinct()
+    )
     out = (
         nodes.join(
             edges.select(
@@ -1839,7 +1854,7 @@ def r66_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-pair Jaccard distribution by decile bucket — the
     threshold-tuning companion to q31.
     """
-    cand = candidate_jaccard(_t(spark, sf_dir, "documents"))
+    cand = candidate_pairs(spark, sf_dir)
     bucket = F.least(F.floor(F.col("jac") * 10).cast("long"), F.lit(9))
     return (
         cand.groupBy(bucket.alias("bucket"))
@@ -2578,7 +2593,7 @@ def x104_contrastive_negatives(spark: SparkSession,
     """Per-doc deterministic non-near-dup negative draws (summary:
     anchors, draws, min draws per anchor)."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = candidate_jaccard(docs).filter(F.col("jac") >= 0.5).select(
+    pairs = candidate_pairs(spark, sf_dir).filter(F.col("jac") >= 0.5).select(
         "doc_id_0", "doc_id_1")
     comp = neardup_components(pairs).select("doc_id", "component")
     neg = contrastive_negatives(docs, comp)

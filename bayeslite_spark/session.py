@@ -25,6 +25,14 @@ Scale notes (the whole engine is designed for a ~1000-executor cluster over
   a session is active, so it has to be in the session conf before any
   Column or DataFrame call; ``get_spark`` is where every session here
   is built.
+- The generated-code cache holds 8192 classes
+  (``spark.sql.codegen.cache.maxEntries``, default 100). One pass over
+  the registered queries compiles about 3,600 distinct classes, so with
+  100 entries a warm pass compiled about 5,200 classes again; with 8192
+  it compiles 85-159, and a warm pass took 77 s instead of 92 s (sf0.01,
+  ``local[32]`` on 4 vCPU, the JVM's peak memory unchanged). The conf is
+  static: it takes effect only in the session that starts the
+  SparkContext.
 """
 
 from __future__ import annotations
@@ -66,6 +74,8 @@ def get_spark(app_name: str = "bayeslite_spark", shuffle_partitions: int | None 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # no per-call origin capture (module docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # keep a whole pass's generated classes (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # UI off by default (bench hygiene); SPARK_GRAFT_UI=1 turns it on
         # for metric-reading tools (scale_smoke's shuffle-bytes REST read)

@@ -120,24 +120,42 @@ def fan_out(df: DataFrame, min_factor: int = 1) -> DataFrame:
 _T_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Table loader with a per-session plan cache: the DataFrame is an
-    immutable logical plan, so reusing it skips repeated parquet footer /
-    schema discovery (one JVM round-trip per read.parquet call)."""
-    key = (id(spark), sf_dir, name)
-    if key in _T_CACHE:
-        return _T_CACHE[key]
-    if name == "events":
-        # events.parquet is TIMESTAMP(NANOS): the driver's session may not
-        # carry the legacy conf, so set it at runtime before the scan
-        from bayeslite_spark.session import normalize_events
+def _session_plan(spark: SparkSession, sf_dir: str, name: str,
+                  build: Callable[[], DataFrame]) -> DataFrame:
+    """``build()``'s plan, made once per (session, data dir, name) and
+    kept in ``_T_CACHE`` beside that data dir's table plans, so dropping a
+    data dir's entries drops it too. Reusing a plan skips building it
+    again through py4j, where each DataFrame operator costs a round trip
+    and an eager Catalyst analysis.
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_events(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _T_CACHE[key] = df
-    return df
+    Cache only plans that every caller transforms further, never a frame
+    a registered entry returns as it is. Each derived DataFrame gets its
+    own QueryExecution, so each collect runs all its stages again; a
+    second collect of the SAME DataFrame object reuses the shuffle output
+    of the first (its stages show as skipped), so caching a returned
+    frame would share results across calls, not just plans."""
+    key = (id(spark), sf_dir, name)
+    if key not in _T_CACHE:
+        _T_CACHE[key] = build()
+    return _T_CACHE[key]
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table loader with a per-session plan cache (``_session_plan``): the
+    DataFrame is an immutable logical plan, so reusing it skips repeated
+    parquet footer / schema discovery (one JVM round-trip per
+    read.parquet call)."""
+    def read() -> DataFrame:
+        if name == "events":
+            # events.parquet is TIMESTAMP(NANOS): the driver's session may
+            # not carry the legacy conf, so set it at runtime before the scan
+            from bayeslite_spark.session import normalize_events
+
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return normalize_events(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+    return _session_plan(spark, sf_dir, name, read)
 
 
 # ---------------------------------------------------------------------------

@@ -33,8 +33,11 @@ def checkpoint_dir(tmp_path_factory):
 
 
 def count_jobs(spark, fn):
-    """(fn(), Spark jobs fn launched), counting jobs from other threads
-    (no job group) as well as the caller's."""
+    """(fn(), Spark jobs fn launched, tasks those jobs completed), counting
+    jobs from other threads (no job group) as well as the caller's. A
+    stage skipped because its shuffle output was reused completes no
+    tasks, so the task count tells a re-executed plan from one that
+    reused an earlier run's stages."""
     import uuid
 
     sc = spark.sparkContext
@@ -50,8 +53,11 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     drain()
-    extra = set(st.getJobIdsForGroup(None)) - untagged
-    return out, len(st.getJobIdsForGroup(group)) + len(extra)
+    jobs = set(st.getJobIdsForGroup(group)) | (
+        set(st.getJobIdsForGroup(None)) - untagged)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    tasks = sum(st.getStageInfo(s).numCompletedTasks for s in stages)
+    return out, len(jobs), tasks
 
 
 def count_py4j(spark, fn):

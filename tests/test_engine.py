@@ -1302,8 +1302,8 @@ def test_bql_read_path_job_counts(spark, eng):
         qs[n](spark, SF_SMOKE).collect()
     jobs = {}
     for n in names:
-        df, built = count_jobs(spark, lambda n=n: qs[n](spark, SF_SMOKE))
-        _, collected = count_jobs(spark, df.collect)
+        df, built, _ = count_jobs(spark, lambda n=n: qs[n](spark, SF_SMOKE))
+        _, collected, _ = count_jobs(spark, df.collect)
         jobs[n] = built + collected
     assert jobs["x54_bql_density"] == 0
     assert jobs["x60_bql_regress"] == 0
@@ -1319,7 +1319,7 @@ def test_bql_read_path_job_counts(spark, eng):
     fresh.register_table("supplier", eng.table("supplier"))
     status = fresh.execute("CREATE POPULATION pjobs FOR supplier "
                            "(s_suppkey KEY; s_acctbal NUMERICAL; IGNORE s_name, s_nationkey)")
-    rows, collected = count_jobs(spark, status.collect)
+    rows, collected, _ = count_jobs(spark, status.collect)
     assert len(rows) == 1 and collected == 0
 
 

@@ -4110,7 +4110,7 @@ def test_rank_and_graph_gate_plans_run_no_python_worker(spark):
         for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, (name, node)
     q71 = qs["q71_neardup_components"](spark, SF_SMOKE)
-    rows, jobs = count_jobs(spark, q71.collect)
+    rows, jobs, _ = count_jobs(spark, q71.collect)
     assert rows and jobs == 0
 
 
@@ -4121,7 +4121,11 @@ def test_q71_and_r71_job_budgets(spark, monkeypatch):
     projection of the per-customer aggregate (one ``orders`` scan in the
     checkpointed rank plan) and takes both tie lookups from one
     aggregate (10 jobs in all, not 13); neither build sends a call-site
-    (origin) py4j command."""
+    (origin) py4j command. A warm q71 build takes its candidate-pair
+    plan from the session's plan cache: about 120 py4j commands, where
+    rebuilding that plan made it about 440. Not counted: the ``m``
+    commands that release Java objects whose Python proxies the garbage
+    collector freed, whenever it happens to run."""
     import bayeslite_spark.operators.analytics_queries as aq
     from bayeslite_spark.workload import get_queries
 
@@ -4130,13 +4134,14 @@ def test_q71_and_r71_job_budgets(spark, monkeypatch):
         qs[name](spark, SF_SMOKE).collect()   # warm the table caches
 
     def build(name):
-        (df, jobs), sent = count_py4j(spark, lambda: count_jobs(
+        (df, sent), jobs, _ = count_jobs(spark, lambda: count_py4j(
             spark, lambda: qs[name](spark, SF_SMOKE)))
         assert not [t for t in sent if "PySparkCurrentOrigin" in t], name
-        return df, jobs
+        return df, jobs, sum(n for t, n in sent.items() if t != "m")
 
-    q71, built = build("q71_neardup_components")
+    q71, built, sent = build("q71_neardup_components")
     assert q71.collect() and built <= 3, built
+    assert sent <= 200, sent
     ranked = []
     range_rank = aq._range_rank
 
@@ -4145,11 +4150,56 @@ def test_q71_and_r71_job_budgets(spark, monkeypatch):
         return range_rank(df, *args)
 
     monkeypatch.setattr(aq, "_range_rank", recorded)
-    r71, built = build("r71_spearman")
-    rows, ran = count_jobs(spark, r71.collect)
+    r71, built, _ = build("r71_spearman")
+    rows, ran, _ = count_jobs(spark, r71.collect)
     assert rows and built + ran <= 10, (built, ran)
     plan = ranked[0]._jdf.queryExecution().optimizedPlan().toString()
     assert len(ranked) == 1 and plan.count("Relation [o_orderkey") == 1
+
+
+def test_candidate_plan_reused_results_not(spark, monkeypatch):
+    """The dedup queries share one candidate-pair plan per session but
+    never its results: building and collecting q31 and q71 twice runs
+    the same jobs and completes the same tasks both times, with equal
+    rows, while a second collect of one DataFrame skips stages. Dropping
+    a data dir's ``_T_CACHE`` entries makes the next build make a new
+    candidate plan."""
+    import bayeslite_spark.operators.dedup as dd
+    from bayeslite_spark.workload import _T_CACHE, get_queries
+    from tools.check_oracle import value_hash
+
+    qs = get_queries()
+
+    def run(name):
+        df, built, built_tasks = count_jobs(
+            spark, lambda: qs[name](spark, SF_SMOKE))
+        rows, ran, ran_tasks = count_jobs(spark, df.collect)
+        return (built, built_tasks, ran, ran_tasks), value_hash(df.columns, rows)
+
+    for name in ("q31_ngram_jaccard", "q71_neardup_components"):
+        qs[name](spark, SF_SMOKE).collect()   # warm the table and data caches
+        first = run(name)
+        assert first == run(name), name
+        assert first[0][1] + first[0][3] > 0, name
+    (built, _, ran, _), _ = run("q71_neardup_components")
+    assert (built, ran) == (3, 0)
+
+    q31 = qs["q31_ngram_jaccard"](spark, SF_SMOKE)
+    _, ran, tasks = count_jobs(spark, q31.collect)
+    _, reran, retasks = count_jobs(spark, q31.collect)
+    assert ran and reran and retasks < tasks, (tasks, retasks)
+
+    real = dd.candidate_jaccard
+    calls = []
+    monkeypatch.setattr(dd, "candidate_jaccard",
+                        lambda docs: calls.append(docs) or real(docs))
+    cand = dd.candidate_pairs(spark, SF_SMOKE)
+    qs["q31_ngram_jaccard"](spark, SF_SMOKE)
+    assert not calls and dd.candidate_pairs(spark, SF_SMOKE) is cand
+    for k in [k for k in _T_CACHE if k[1] == SF_SMOKE]:
+        del _T_CACHE[k]
+    qs["q31_ngram_jaccard"](spark, SF_SMOKE)
+    assert len(calls) == 1 and dd.candidate_pairs(spark, SF_SMOKE) is not cand
 
 
 def test_spearman_monotone_and_reference(spark):
