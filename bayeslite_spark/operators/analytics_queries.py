@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bayeslite_spark.operators.similarity import K, N_QUERIES, _dot, _norm
-from bayeslite_spark.workload import _t, fan_out, register
+from bayeslite_spark.workload import _session_plan, _t, fan_out, register
 
 _Q44_ORACLE = """
 SELECT o_custkey, o_orderkey,
@@ -1774,7 +1774,9 @@ def r70_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row_number() window cannot give you at scale.  Two passes:
 # (1) range-partition on the order columns, sort each partition, stamp
 # every row with its partition id and its index inside the partition,
-# and count each partition (bounded metadata: one row per partition);
+# and checkpoint; the checkpointing job also observes each partition's
+# row count (bounded metadata: one histogram bin per partition), so no
+# job of its own counts them;
 # (2) project rank = offset[partition] + index + 1, where the offsets
 # are the driver's exclusive prefix over the counts, inlined as one
 # array literal indexed by partition id.  Every rank is exact and
@@ -1798,28 +1800,64 @@ def r70_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _POS_MASK = (1 << 33) - 1
 
 
-def _range_rank(df: DataFrame, order_exprs: list, rank_col: str):
-    """``(ranked, n)``: ``df`` plus a 1-based global ``rank_col`` under
-    the total order ``order_exprs``, and the row count.
+def _shuffle_partition_bound(spark: SparkSession) -> int:
+    """The most partitions a ``repartitionByRange`` without a count can
+    make: the session's ``numShufflePartitions`` (AQE's
+    ``initialPartitionNum`` when set, else ``spark.sql.shuffle.partitions``).
+    AQE only coalesces below it."""
+    return spark._jsparkSession.sessionState().conf().numShufflePartitions()
 
-    ``_pid`` and ``_pos`` are stamped right after the sort and BEFORE
-    the checkpoint, so the stored index is the sorted position no
-    matter where the rank is projected later.  The checkpoint is taken
-    ONCE because repartitionByRange samples its boundaries per job:
-    without it the counting pass and the ranking pass can land on
-    DIFFERENT partitionings (observed at x30 — a pid the count pass
-    never saw).  On a cluster use reliable checkpoint()/cache; the job
-    shape is identical."""
+
+def _range_partitions(df: DataFrame, order_exprs: list):
+    """``(parts, sizes)``: ``df`` range-partitioned and sorted on
+    ``order_exprs``, each row stamped with its partition id ``_pid`` and
+    its index ``_pos`` inside the partition, checkpointed; and
+    ``{pid: rows}`` for every non-empty partition.
+
+    The stamps are taken right after the sort and BEFORE the
+    checkpoint, so the stored index is the sorted position no matter
+    where it is read later.  The checkpoint is taken ONCE because
+    repartitionByRange samples its boundaries per job: without it two
+    passes over the range partitioning can land on DIFFERENT
+    partitionings (observed at x30 — a pid a separate count pass never
+    saw).  On a cluster use reliable checkpoint()/cache; the job shape
+    is identical.
+
+    The sizes are observed by the checkpointing job itself
+    (``DataFrame.observe``): ``histogram_numeric`` over ``_pid`` keeps
+    one exact ``(pid, count)`` bin per distinct pid, and merges bins
+    only past ``nb`` distinct values.  With ``nb`` one above the
+    session's partition bound, fewer than ``nb`` distinct bins whose
+    counts sum to the observed row count prove that no bin was merged;
+    anything else raises."""
+    nb = _shuffle_partition_bound(df.sparkSession) + 1
+    obs = Observation()
     parts = (
         df.repartitionByRange(*order_exprs)
         .sortWithinPartitions(*order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_pos",
-                    F.monotonically_increasing_id().bitwiseAND(_POS_MASK))
+        .withColumns({
+            "_pid": F.spark_partition_id(),
+            "_pos": F.monotonically_increasing_id().bitwiseAND(_POS_MASK)})
+        .observe(obs, F.histogram_numeric("_pid", F.lit(nb)).alias("h"),
+                 F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    sizes = dict(tuple(r) for r in
-                 parts.groupBy("_pid").agg(F.count(F.lit(1))).collect())
+    seen = obs.get
+    bins, n = seen["h"] or [], seen["n"]
+    sizes = {int(b.x): int(b.y) for b in bins}
+    if len(bins) >= nb or sum(sizes.values()) != n:
+        raise RuntimeError(
+            f"_range_partitions: {len(bins)} partition-size bins (limit "
+            f"{nb - 1}) hold {sum(sizes.values())} of the {n} rows observed")
+    return parts, sizes
+
+
+def _range_rank(df: DataFrame, order_exprs: list, rank_col: str):
+    """``(ranked, n)``: ``df`` plus a 1-based global ``rank_col`` under
+    the total order ``order_exprs``, and the row count.  It runs only
+    ``_range_partitions``' jobs (the boundary sample and the
+    checkpoint); the rank is a Catalyst projection over the checkpoint."""
+    parts, sizes = _range_partitions(df, order_exprs)
     # partition ids are dense (0..P-1): offsets[pid] is an O(1) array
     # index per row, built in one expression (a pid with no rows gets
     # the running total, which no row reads)
@@ -1842,46 +1880,29 @@ def distributed_rank(df: DataFrame, order_cols: list,
     repartitionByRange and sortWithinPartitions both honor SortOrder
     expressions, so DESC ranking needs no value negation).
 
-    Jobs: the range shuffle and checkpoint, one per-partition count
-    collect, then the rank is a Catalyst projection over the
+    Jobs: the range shuffle and checkpoint, whose job also observes the
+    partition sizes; the rank is then a Catalyst projection over the
     checkpoint (``_range_rank``)."""
+    return _range_rank(df, _order_exprs(order_cols), rank_col)[0]
+
+
+def _order_exprs(order_cols: list) -> list:
+    """``order_cols`` as Columns: names become ``F.col``, Columns (sort
+    expressions included) pass through."""
     from pyspark.sql import Column
 
-    order_exprs = [c if isinstance(c, Column) else F.col(c)
-                   for c in order_cols]
-    return _range_rank(df, order_exprs, rank_col)[0]
+    return [c if isinstance(c, Column) else F.col(c) for c in order_cols]
 
 
 def distributed_ntile(df: DataFrame, order_cols: list, n: int,
                       out_col: str = "tile") -> DataFrame:
     """ntile(n) over a data-proportional table WITHOUT the global window:
-    two-pass :func:`distributed_rank` + exact integer remainder
-    arithmetic reproducing SQL ntile's front-loaded buckets (with
-    base = total div n and rem = total mod n, the first rem buckets hold
-    base+1 rows):
-
-        tile(r) = (r-1) div (base+1) + 1                      r <= rem*(base+1)
-                = rem + (r - rem*(base+1) - 1) div base + 1   otherwise
-
-    NOT floor((r-1)*n/total)+1, which misplaces rows once the pivot
-    passes base*n (e.g. total=8, n=5 puts rank 6 in bucket 4 where ntile
-    says 3). ``order_cols`` must be a total order. Bit-equal to
+    the :func:`distributed_rank` pass, whose row count comes with the
+    ranks, and :func:`ntile_of_rank`'s exact bucket arithmetic as one
+    projection. ``order_cols`` must be a total order. Bit-equal to
     Window-ntile and to DuckDB's (r06 hash-matches at 3 SFs on it)."""
-    ranked = distributed_rank(df, order_cols, "_r")
-    total = ranked.agg(F.max("_r").alias("_n"))
-    return (
-        ranked.crossJoin(F.broadcast(total))
-        .withColumn("_base", F.expr(f"_n div {n}"))
-        .withColumn("_rem", F.col("_n") % n)
-        .withColumn("_pivot", F.col("_rem") * (F.col("_base") + 1))
-        .withColumn(
-            out_col,
-            F.when(F.col("_r") <= F.col("_pivot"),
-                   F.expr("(_r - 1) div (_base + 1) + 1"))
-            .otherwise(F.expr("_rem + (_r - _pivot - 1) div _base + 1"))
-            .cast("int"))
-        .drop("_r", "_n", "_base", "_rem", "_pivot")
-    )
+    ranked, total = _range_rank(df, _order_exprs(order_cols), "_r")
+    return ranked.withColumn(out_col, ntile_of_rank("_r", n, total)).drop("_r")
 
 
 def distributed_multi_rank(df: DataFrame, key_col: str,
@@ -1910,10 +1931,12 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
     downstream crosses the shuffle once.
 
     Returns ``(frame, n_rows)``: one row per input row with columns
-    ``(key_col, *carry, *specs)``, and the exact row count (free from
-    the offset collect — callers that need N skip a count job).
+    ``(key_col, *carry, *specs)``, and the exact row count (free: the
+    checkpointing job observes it with the partition sizes, so callers
+    that need N skip a count job).
     """
-    ranked, n_rows = _rank_stacked(df, key_col, specs, carry)
+    ranked, n_rows = _rank_stacked(
+        _stack_blocks(df, key_col, specs, carry), key_col, len(specs))
     aggs = [F.max(F.when(F.col("_blk") == i,
                          F.col("_r") - F.lit(i * n_rows)))
             .cast("long").alias(name) for i, name in enumerate(specs)]
@@ -1922,15 +1945,13 @@ def distributed_multi_rank(df: DataFrame, key_col: str,
     return ranked.groupBy(key_col).agg(*aggs), n_rows
 
 
-def _rank_stacked(df: DataFrame, key_col: str, specs: "dict[str, list]",
-                  carry: "list[str] | None" = None):
-    """``(ranked, n_rows)``: the blocks of ``distributed_multi_rank``
-    stacked and ranked with one ``_range_rank``.  Block ``i`` holds spec
-    ``i``'s rows as ``(_blk, _k0.._k{arity-1}, key_col, *carry)``, the
-    keys cast to long and ``carry`` non-null in block 0 only; one
-    ``inline`` projection emits every block, so ``df`` runs once.  ``_r``
-    is the rank under ``(_blk, keys..., key_col)``, so block ``i``'s own
-    1-based rank is ``_r - i * n_rows``."""
+def _stack_blocks(df: DataFrame, key_col: str, specs: "dict[str, list]",
+                  carry: "list[str] | None" = None) -> DataFrame:
+    """The blocks of ``distributed_multi_rank`` stacked as one plan (no
+    job).  Block ``i`` holds spec ``i``'s rows as
+    ``(_blk, _k0.._k{arity-1}, key_col, *carry)``, the keys cast to
+    long and ``carry`` non-null in block 0 only; one ``inline``
+    projection emits every block, so ``df`` runs once."""
     from pyspark.sql.types import IntegralType
 
     carry = list(carry or ())
@@ -1955,19 +1976,32 @@ def _rank_stacked(df: DataFrame, key_col: str, specs: "dict[str, list]",
                     else F.lit(None).cast(carry_types[c])).alias(c)
                    for c in carry])
         for i, cols in enumerate(specs.values())]
-    stacked = df.select(F.inline(F.array(*blocks)))
-    order_exprs = ([F.col("_blk")]
-                   + [F.col(f"_k{j}") for j in range(arity)]
-                   + [F.col(key_col)])
+    return df.select(F.inline(F.array(*blocks)))
+
+
+def _rank_stacked(stacked: DataFrame, key_col: str, n_blocks: int):
+    """``(ranked, n_rows)``: ``_stack_blocks``'s frame of ``n_blocks``
+    blocks ranked with one ``_range_rank``.  ``_r`` is the rank under
+    ``(_blk, keys..., key_col)``, the columns up to ``key_col``, so
+    block ``i``'s own 1-based rank is ``_r - i * n_rows``."""
+    cols = stacked.columns
+    order_exprs = [F.col(c) for c in cols[:cols.index(key_col) + 1]]
     ranked, total = _range_rank(stacked, order_exprs, "_r")
-    return ranked, total // len(specs)
+    return ranked, total // n_blocks
 
 
 def ntile_of_rank(rank_col: str, n: int, n_rows: int):
     """SQL ``ntile(n)``'s front-loaded bucket of a 1-based global rank
-    column (by NAME), as a pure expression with driver-known ``n_rows``
-    — the exact integer ``div`` arithmetic of :func:`distributed_ntile`,
-    minus its broadcast-total crossJoin."""
+    column (by NAME), as a pure expression with driver-known ``n_rows``.
+    With base = n_rows div n and rem = n_rows mod n, the first rem
+    buckets hold base+1 rows:
+
+        tile(r) = (r-1) div (base+1) + 1                      r <= rem*(base+1)
+                = rem + (r - rem*(base+1) - 1) div base + 1   otherwise
+
+    NOT floor((r-1)*n/n_rows)+1, which misplaces rows once the pivot
+    passes base*n (e.g. n_rows=8, n=5 puts rank 6 in bucket 4 where
+    ntile says 3)."""
     base, rem = divmod(int(n_rows), int(n))
     pivot = rem * (base + 1)
     first = f"(({rank_col} - 1) div {base + 1} + 1)"
@@ -2029,9 +2063,23 @@ def spearman(df: DataFrame, x_col: str, y_col: str,
     which carries ``y``, looks up both its ranks there for the final
     1-row aggregate of exact sums.  Values must be integral, as for
     ``distributed_multi_rank``."""
-    ranked, n_rows = _rank_stacked(
-        df.select(key_col, x_col, y_col), key_col,
-        {"x": [F.col(x_col)], "y": [F.col(y_col)]}, carry=[y_col])
+    return _spearman_of_blocks(
+        _spearman_blocks(df, x_col, y_col, key_col), y_col, key_col)
+
+
+def _spearman_blocks(df: DataFrame, x_col: str, y_col: str,
+                     key_col: str) -> DataFrame:
+    """``spearman``'s rank input: ``x`` and ``y`` as two stacked blocks
+    (``_stack_blocks``), ``y`` carried on block 0.  A plan, no job."""
+    return _stack_blocks(df.select(key_col, x_col, y_col), key_col,
+                         {"x": [F.col(x_col)], "y": [F.col(y_col)]},
+                         carry=[y_col])
+
+
+def _spearman_of_blocks(stacked: DataFrame, y_col: str,
+                        key_col: str) -> DataFrame:
+    """``spearman`` of its ``_spearman_blocks`` input, which it ranks."""
+    ranked, n_rows = _rank_stacked(stacked, key_col, 2)
     # A struct key, because Catalyst pushes a filter on a grouping
     # column below the aggregate (one aggregate per block).  Left joins
     # (every block-0 value has its tie row) build on the tie table only,
@@ -2059,14 +2107,24 @@ def spearman(df: DataFrame, x_col: str, y_col: str,
 def r71_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between per-customer order count and
     total spend (monotone-association check, outlier-robust).
+
+    The rank input (the per-customer aggregate stacked into rank
+    blocks) is a plan built once per session
+    (``workload._session_plan``); each call ranks it anew, so calls
+    share the plan, never its results.
     """
-    orders = _t(spark, sf_dir, "orders")
-    per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long").alias("cents"),
-    )
-    return spearman(per_cust, "n_orders", "cents", "ck")
+    def blocks() -> DataFrame:
+        orders = _t(spark, sf_dir, "orders")
+        per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            .cast("long").alias("cents"),
+        )
+        return _spearman_blocks(per_cust, "n_orders", "cents", "ck")
+
+    stacked = _session_plan(spark, sf_dir, "orders:r71_spearman_blocks",
+                            blocks)
+    return _spearman_of_blocks(stacked, "cents", "ck")
 
 
 # ---------------------------------------------------------------------------
@@ -2440,7 +2498,7 @@ def kendall_tau(df: DataFrame, x_col: str, y_col: str,
     # rx orders by (x, y, key); ry ordered by (y, rx), and since rx is
     # the unique (x, y, key) rank, (y, rx) == (y, x, key) exactly — the
     # stacked specs below produce bit-identical rank values.  n comes
-    # free from the offset collect (no count job).
+    # with the ranks, observed by the checkpoint job (no count job).
     src = df.select(key_col, x_col, y_col).localCheckpoint(eager=True)
     ranked, n = distributed_multi_rank(
         src, key_col,

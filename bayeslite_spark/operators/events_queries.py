@@ -832,9 +832,9 @@ def r06_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NTILE(10) customer-value decile table over purchase events.
 
     Scale: per-user aggregate (map-combined), two-pass distributed_rank
-    over the user-grain table (range partition, NO global window), a
-    1-row broadcast of the total count, then a 10-row rollup — every
-    stage data-parallel at any user count.
+    over the user-grain table (range partition, NO global window; the
+    total count comes with the ranks, observed by the checkpoint job),
+    then a 10-row rollup — every stage data-parallel at any user count.
     """
     return value_deciles(_t(spark, sf_dir, "events"))
 

@@ -13,6 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # it in SparkBQL.PLAN_GUARD_ALLOW, never by unsetting this.
 os.environ.setdefault("SPARK_GRAFT_PLAN_GUARD", "1")
 
+from tools.job_table import count_jobs  # noqa: E402,F401  (tests import it from here)
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_T2 = "/root/testdata/sf0.01"
 
@@ -30,34 +32,6 @@ def checkpoint_dir(tmp_path_factory):
     """The reliable-checkpoint directory every test shares: a context
     keeps the first directory set on it (``dedup._truncate``)."""
     return str(tmp_path_factory.mktemp("ckpt"))
-
-
-def count_jobs(spark, fn):
-    """(fn(), Spark jobs fn launched, tasks those jobs completed), counting
-    jobs from other threads (no job group) as well as the caller's. A
-    stage skipped because its shuffle output was reused completes no
-    tasks, so the task count tells a re-executed plan from one that
-    reused an earlier run's stages."""
-    import uuid
-
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
-    group = f"jobguard-{uuid.uuid4().hex}"
-    drain()
-    untagged = set(st.getJobIdsForGroup(None))
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    drain()
-    jobs = set(st.getJobIdsForGroup(group)) | (
-        set(st.getJobIdsForGroup(None)) - untagged)
-    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
-    tasks = sum(st.getStageInfo(s).numCompletedTasks for s in stages)
-    return out, len(jobs), tasks
 
 
 def count_py4j(spark, fn):

@@ -4069,6 +4069,49 @@ def test_distributed_rank_partition_shapes(spark):
     assert distributed_rank(big.limit(0), ["v", "id"]).collect() == []
 
 
+def test_range_partition_sizes_observed_by_checkpoint(spark, monkeypatch):
+    """The partition sizes ``_range_partitions`` reads from its
+    checkpoint job's observation equal a ``groupBy("_pid").count()``
+    over the same checkpoint, on frames ranged into 24 partitions: skewed
+    keys whose heavy value is the maximum (so the top range partition is
+    empty), NULL sort keys, and the empty frame.  A histogram bin limit
+    below the partition count raises rather than rank from merged bins."""
+    import numpy as np
+
+    import bayeslite_spark.operators.analytics_queries as aq
+
+    def observed(df, order):
+        parts, sizes = aq._range_partitions(df, [F.col(c) for c in order])
+        counted = {r[0]: r[1] for r in parts.groupBy("_pid").count().collect()}
+        return sizes, counted, parts.rdd.getNumPartitions()
+
+    many = {"spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": "24"}
+    skew = spark.createDataFrame(
+        [(i, i if i < 3000 else 10**6) for i in range(6000)], "id long, v long")
+    sizes, counted, n_parts = _with_confs(
+        spark, many, lambda: observed(skew, ["v"]))
+    assert sizes == counted and sum(sizes.values()) == 6000
+    assert 1 < len(sizes) < n_parts, (sizes, n_parts)
+    assert max(sizes.values()) >= 3000
+
+    rng = np.random.default_rng(11)
+    rows = [(i, None if i % 7 == 3 else int(v))
+            for i, v in enumerate(rng.integers(0, 500, 4000))]
+    nulls = spark.createDataFrame(rows, "id long, v long")
+    sizes, counted, _ = _with_confs(
+        spark, many, lambda: observed(nulls, ["v", "id"]))
+    assert sizes == counted and sum(sizes.values()) == 4000
+    assert len(sizes) > 12, sizes
+    sizes, counted, _ = _with_confs(
+        spark, many, lambda: observed(nulls.limit(0), ["v", "id"]))
+    assert sizes == counted == {}
+
+    monkeypatch.setattr(aq, "_shuffle_partition_bound", lambda spark: 1)
+    with pytest.raises(RuntimeError, match="partition-size bins"):
+        _with_confs(spark, many, lambda: observed(nulls, ["v", "id"]))
+
+
 def test_multi_rank_with_carry_equals_window_ranks(spark):
     """Two orders ranked with one shuffle, carry payload riding block 0:
     each rank equals its own row_number() window (a NULL sort key ranks
@@ -4119,13 +4162,16 @@ def test_q71_and_r71_job_budgets(spark, monkeypatch):
     materializes the edges, and the Jaccard index carries its set sizes
     (3 build jobs, not 9); Spearman stacks both rank blocks from one
     projection of the per-customer aggregate (one ``orders`` scan in the
-    checkpointed rank plan) and takes both tie lookups from one
-    aggregate (10 jobs in all, not 13); neither build sends a call-site
-    (origin) py4j command. A warm q71 build takes its candidate-pair
-    plan from the session's plan cache: about 120 py4j commands, where
-    rebuilding that plan made it about 440. Not counted: the ``m``
-    commands that release Java objects whose Python proxies the garbage
-    collector freed, whenever it happens to run."""
+    checkpointed rank plan), reads the rank's partition sizes from the
+    checkpoint job and takes both tie lookups from one aggregate (8 jobs
+    in all, not 13); neither build sends a call-site (origin) py4j
+    command. A warm q71 build takes its candidate-pair plan from the
+    session's plan cache: about 120 py4j commands, where rebuilding that
+    plan made it about 440. A warm r71 build takes its stacked rank
+    input from the same cache: about 355 commands, where rebuilding it
+    and collecting the partition sizes made it about 480. Not counted:
+    the ``m`` commands that release Java objects whose Python proxies
+    the garbage collector freed, whenever it happens to run."""
     import bayeslite_spark.operators.analytics_queries as aq
     from bayeslite_spark.workload import get_queries
 
@@ -4150,20 +4196,22 @@ def test_q71_and_r71_job_budgets(spark, monkeypatch):
         return range_rank(df, *args)
 
     monkeypatch.setattr(aq, "_range_rank", recorded)
-    r71, built, _ = build("r71_spearman")
+    r71, built, sent = build("r71_spearman")
     rows, ran, _ = count_jobs(spark, r71.collect)
-    assert rows and built + ran <= 10, (built, ran)
+    assert rows and built + ran <= 8, (built, ran)
+    assert sent <= 400, sent
     plan = ranked[0]._jdf.queryExecution().optimizedPlan().toString()
     assert len(ranked) == 1 and plan.count("Relation [o_orderkey") == 1
 
 
 def test_candidate_plan_reused_results_not(spark, monkeypatch):
-    """The dedup queries share one candidate-pair plan per session but
-    never its results: building and collecting q31 and q71 twice runs
-    the same jobs and completes the same tasks both times, with equal
-    rows, while a second collect of one DataFrame skips stages. Dropping
-    a data dir's ``_T_CACHE`` entries makes the next build make a new
-    candidate plan."""
+    """The dedup queries share one candidate-pair plan per session, and
+    r71 one stacked rank input, but never their results: building and
+    collecting q31, q71 and r71 twice runs the same jobs and completes
+    the same tasks both times, with equal rows, while a second collect
+    of one DataFrame skips stages. Dropping a data dir's ``_T_CACHE``
+    entries makes the next build make a new candidate plan."""
+    import bayeslite_spark.operators.analytics_queries as aq
     import bayeslite_spark.operators.dedup as dd
     from bayeslite_spark.workload import _T_CACHE, get_queries
     from tools.check_oracle import value_hash
@@ -4176,7 +4224,8 @@ def test_candidate_plan_reused_results_not(spark, monkeypatch):
         rows, ran, ran_tasks = count_jobs(spark, df.collect)
         return (built, built_tasks, ran, ran_tasks), value_hash(df.columns, rows)
 
-    for name in ("q31_ngram_jaccard", "q71_neardup_components"):
+    for name in ("q31_ngram_jaccard", "q71_neardup_components",
+                 "r71_spearman"):
         qs[name](spark, SF_SMOKE).collect()   # warm the table and data caches
         first = run(name)
         assert first == run(name), name
@@ -4196,6 +4245,11 @@ def test_candidate_plan_reused_results_not(spark, monkeypatch):
     cand = dd.candidate_pairs(spark, SF_SMOKE)
     qs["q31_ngram_jaccard"](spark, SF_SMOKE)
     assert not calls and dd.candidate_pairs(spark, SF_SMOKE) is cand
+    blocks = aq._spearman_blocks
+    monkeypatch.setattr(aq, "_spearman_blocks",
+                        lambda *a: calls.append(a) or blocks(*a))
+    qs["r71_spearman"](spark, SF_SMOKE)
+    assert not calls
     for k in [k for k in _T_CACHE if k[1] == SF_SMOKE]:
         del _T_CACHE[k]
     qs["q31_ngram_jaccard"](spark, SF_SMOKE)
